@@ -3312,6 +3312,9 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager=False — the checkpoint materializes inside the consumer's
     # own action instead of paying a separate build-time job + a second
     # action's planning round-trip (one driver action per invocation).
+    # That job count holds for a fresh file scan; a session-cached
+    # documents input adds one query-stage job (dsir_weights' "a cached
+    # input disables the reuse" caveat).
     w = dsir_weights(d, F.col("lang") == "en").localCheckpoint(eager=False)
     top = dsir_select(d, F.col("lang") == "en", k=100, weights=w).select(
         F.lit("top").alias("mode"),
