@@ -879,7 +879,7 @@ class BM25Index:
         under it — a frozen file listing crashes on the vanished files,
         where a fresh read just serves the new postings. Per-call
         listing cost is amortized where it matters by the callers'
-        prepared-plan caches (queries._BM25_PROBE_PLAN_CACHE), whose
+        prepared plans (queries.q_doc_bm25_topk's ``bm25plans`` fixture), whose
         indexes are immutable after construction."""
         return self.spark.read.parquet(self.postings_dir)
 
@@ -1095,6 +1095,14 @@ class BM25Index:
         # — the same long subtraction and double division, now constant-
         # folded, so scores stay bit-identical to the aggregate form.
         srows = self._stats_rows()
+        if not srows:
+            # stats vanished after exists() (a sibling's build() deletes
+            # stats/ before re-appending) or are torn: N = 0 would make
+            # _avgdl 0/0 and every score NULL — fail loudly instead
+            raise FileNotFoundError(
+                f"no BM25 index at {self.root}: stats partials missing "
+                "(torn or concurrently rebuilt index)"
+            )
         bn = sum(int(r["n_docs"]) for r in srows)
         bdl = sum(int(r["sum_dl"]) for r in srows)
         if tomb is not None:

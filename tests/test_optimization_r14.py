@@ -46,28 +46,25 @@ def test_dsir_select_job_budget(spark, sf_dir, tmp_path):
 
 
 def test_served_bm25_entry_mutation_log_bounded(spark, sf_dir):
-    """r14 (VERDICT r13 #8): the standing streaming entries own their
-    fixture stores outright — this ingest's maintainers are the
-    mutation log's only possible consumers — so they run with
-    vacuum_mutation_log=True by DEFAULT. After _bm25_served_topk's
-    staged delete+upsert+heal flow, the store's key log must hold no
-    entry below the final batch's clock floor (bounded at O(1) here
-    instead of growing O(touched) forever), while the served ranking
-    stayed exact (its oracle hash is gated elsewhere)."""
-    import hashlib
+    """The standing streaming entries own their fixture stores outright
+    — this ingest's maintainers are the mutation log's only possible
+    consumers — so they run with vacuum_mutation_log=True. After
+    _bm25_served_index's staged delete+upsert+heal flow, the store's
+    key log must hold no entry below the final batch's clock floor
+    (bounded at O(1) here instead of growing O(touched) forever), while
+    the served ranking stayed exact (its oracle hash is gated
+    elsewhere). The store sits beside the served index under the
+    fixture root."""
     import os
-    import tempfile
 
-    from deployment_spark.queries import _bm25_served_topk
+    from deployment_spark.queries import BM25_TERMS, _bm25_served_index
 
-    assert _bm25_served_topk(spark, sf_dir).count() > 0
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    mdir = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_bm25srv_{tag}", "store", "_mutations"
-    )
-    seqs = sorted(
-        int(n[4:]) for n in os.listdir(mdir) if n.startswith("seq=")
-    ) if os.path.isdir(mdir) else []
+    idx = _bm25_served_index(spark, sf_dir)
+    assert idx.topk(BM25_TERMS, k=20).count() > 0
+    root = os.path.dirname(idx.root.removeprefix("file://"))
+    mdir = os.path.join(root, "store", "_mutations")
+    assert os.path.isdir(mdir), mdir
+    seqs = sorted(int(n[4:]) for n in os.listdir(mdir) if n.startswith("seq="))
     # the delete and the upsert each logged one entry; the second run's
     # vacuum floor (clock at batch start) is past the delete's seq, so
     # at most the floor entry itself survives
@@ -76,7 +73,7 @@ def test_served_bm25_entry_mutation_log_bounded(spark, sf_dir):
 
 def test_codec_recall_groups_share_one_exact_reference(spark, sf_dir):
     """ann_recall (r14, VERDICT r13 next #2): the four codec families'
-    exact reference is computed ONCE per process (_exact_norm_topk10)
+    exact reference is computed ONCE per session (_exact_norm_topk10)
     and the raw-cosine reference once for the ivf pruned/graph groups
     (_exact_raw_topk10) — the same frame OBJECT is handed to every
     consumer, and its values equal a fresh computation of the identical
@@ -91,7 +88,7 @@ def test_codec_recall_groups_share_one_exact_reference(spark, sf_dir):
     )
 
     a = _exact_norm_topk10(spark, sf_dir)
-    assert _exact_norm_topk10(spark, sf_dir) is a  # per-process cache
+    assert _exact_norm_topk10(spark, sf_dir) is a  # per-session fixture
     b = _exact_raw_topk10(spark, sf_dir)
     assert _exact_raw_topk10(spark, sf_dir) is b
 

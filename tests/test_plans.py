@@ -474,8 +474,8 @@ def test_expensive_entries_exchange_budget(spark, sf_dir):
         # broadcasts) — 2 exchanges per arm. r12 four-probe widening:
         # probe=deleted and probe=served each add their own
         # pruned-postings agg + rank window (their index/state
-        # CONSTRUCTION runs eagerly in the build-once-per-process
-        # caches, so only the four serving-read plans appear here);
+        # CONSTRUCTION runs eagerly in queries._fixture's build-once
+        # memo, so only the four serving-read plans appear here);
         # 10 measured at pin time — 2 per ranking × 4 probes plus the
         # deleted arm's tombstone-correction aggregation pair
         "doc_bm25_topk": 10,

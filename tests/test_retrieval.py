@@ -347,6 +347,34 @@ def test_bm25_index_absent_raises_contract_error(spark, tmp_path):
     with pytest.raises(ValueError, match="non-empty"):
         idx.search_scores([])
 
+
+def test_bm25_index_torn_stats_raises_contract_error(spark, corpus_docs, tmp_path):
+    """A missing stats dir must fail with the library's contract error,
+    never serve scores computed from N = 0 (avgdl 0/0 → every score
+    NULL). Two shapes: the stats dir is gone before the search, and it
+    vanishes INSIDE the search, after exists() passed — the window a
+    sibling's build() opens when it deletes stats/ before re-appending."""
+    import shutil
+
+    from deployment_spark.operators.retrieval import BM25Index
+
+    _built(spark, corpus_docs, tmp_path / "idx")
+    shutil.rmtree(tmp_path / "idx" / "stats")
+    with pytest.raises(FileNotFoundError, match="no BM25 index"):
+        BM25Index(spark, str(tmp_path / "idx")).search_scores(["common"])
+
+    _built(spark, corpus_docs, tmp_path / "idx2")
+    idx = BM25Index(spark, str(tmp_path / "idx2"))
+    has_postings = idx._has_postings
+
+    def sibling_rebuild_lands():
+        shutil.rmtree(tmp_path / "idx2" / "stats")
+        return has_postings()
+
+    idx._has_postings = sibling_rebuild_lands
+    with pytest.raises(FileNotFoundError, match="no BM25 index"):
+        idx.search_scores(["common"])
+
 def test_bm25_index_legacy_stats_compact_and_rebucket(spark, corpus_docs, tmp_path):
     """r12 ADVICE: pre-r12 stats partials carry no src_seq/src_clock
     columns; _fold_stats aggregated them unconditionally, raising AFTER

@@ -154,6 +154,7 @@ def check_ann_recall(spark, spark_sf: str, data_sf: str, sdf: pd.DataFrame) -> l
         SQ_ADC_FLOOR,
         SQ_BATCH_FLOOR,
         SQ_RERANK_FLOOR,
+        _ivf_big_index,
     )
 
     k = 10
@@ -202,6 +203,15 @@ def check_ann_recall(spark, spark_sf: str, data_sf: str, sdf: pd.DataFrame) -> l
             f"facet group set mismatch: {sorted(approx_sets)} vs {sorted(floors)}"
         )
         return problems
+    # the distributed arm's 1.0 floor rests on its construction: one doc
+    # per cluster over nlist > 1,024 lists, all 20 queries × 10 hits
+    # routed (in-process the index is the entry's memoized fixture)
+    dist = approx_sets[("ivf", "distributed")]
+    assert len(dist) == 20 and all(len(v) == k for v in dist.values()), {
+        q: len(v) for q, v in dist.items()
+    }
+    nlist = _ivf_big_index(spark, spark_sf)[0].nlist()
+    assert nlist > 1024, nlist
 
     # exact reference sets, independent of the engine (numpy off the
     # raw parquet). The cosine set serves every codec family; the two
