@@ -58,6 +58,75 @@ class StaleServingStateError(RuntimeError):
     rebuild for replace or log-less stores) or ``'rebuild'``."""
 
 
+class Memo:
+    """One value under one key: the one freshness rule for driver-side
+    caches over durable state (store schemas, BM25/token index stats
+    and tombstone corrections, IVF cluster counts). The key is the
+    durable state the value was read from — a file's path and mtime, a
+    dir listing, a frame's input files, a data path — observed BEFORE
+    computing, so
+    any writer (this handle, a sibling, another process) and any
+    time-travel read gets a recompute, never a stale hit, and nothing
+    invalidates by hand. ``None`` is not held (absence is re-probed).
+    ``put`` holds a value the caller just wrote; ``rekey`` moves the
+    value to a key the caller knows describes the same value. The slot
+    is one tuple, swapped whole."""
+
+    __slots__ = ("_slot",)
+
+    def __init__(self) -> None:
+        self._slot: tuple | None = None
+
+    def get(self, key, compute):
+        slot = self._slot
+        if slot is not None and slot[0] == key:
+            return slot[1]
+        value = compute()
+        if value is not None:
+            self._slot = (key, value)
+        return value
+
+    def put(self, key, value):
+        self._slot = (key, value)
+        return value
+
+    def rekey(self, old, new) -> None:
+        slot = self._slot
+        if slot is not None and slot[0] == old:
+            self._slot = (new, slot[1])
+
+
+def dir_listing(spark: SparkSession, path: str) -> tuple | None:
+    """(name, length, mtime) of every file directly under ``path`` from
+    one Hadoop FS listing (no Spark job), or None when it is missing.
+    Appends add UUID-named part files and rebuilds or swaps replace
+    them, so any write to a parquet dir changes this key."""
+    try:
+        p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+        fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        return tuple(
+            sorted(
+                (st.getPath().getName(), st.getLen(), st.getModificationTime())
+                for st in fs.listStatus(p)
+            )
+        )
+    except Exception:  # path missing
+        return None
+
+
+def parquet_rows(spark: SparkSession, memo: Memo, path: str) -> list:
+    """Every row of the small parquet dir ``path`` ([] when it is
+    missing or empty), collected once per listing of the dir."""
+
+    def collect() -> list:
+        try:
+            return spark.read.parquet(path).collect()
+        except Exception:  # path missing / empty dir
+            return []
+
+    return memo.get(dir_listing(spark, path), collect)
+
+
 class SnapshotStore:
     """Versioned parquet table with last-wins upsert semantics.
 
@@ -137,31 +206,45 @@ class SnapshotStore:
         # (a false positive only costs a scan, never a wrong answer).
         # Cost: one O(batch) column-pruned read-back per written file.
         self.bloom_bits = bloom_bits
-        # (version, StructType) memo for _table_schema — see its docstring
-        self._schema_cache = None
+        self._schema_memo = Memo()
         os.makedirs(root, exist_ok=True)
 
     def _union(self, a: DataFrame, b: DataFrame) -> DataFrame:
         return a.unionByName(b, allowMissingColumns=self.schema_evolution)
 
-    def _table_schema(self):
-        """Published table schema, memoized per version. A mor
-        ``read().schema`` builds the merge plan over EVERY live segment
-        — file listing + footer read per segment, O(segments) of driver
-        work — which the r7 bloom scale probe caught growing
-        ``insert(assume_new=True)``'s cost with segment count (0.48 s at
-        8 segments → 1.20 s at 32, all of it schema-check overhead on an
-        otherwise O(batch) append). The schema can only change through a
-        commit (version bump), so a version-keyed cache is sound,
-        including under schema_evolution and across concurrent writers
-        (their commits bump the version this cache is keyed by)."""
-        v = self.current_version()
-        cached = self._schema_cache
-        if cached is not None and cached[0] == v:
-            return cached[1]
-        sch = self.read(v).schema
-        self._schema_cache = (v, sch)
-        return sch
+    def _schema_key(self, version: int) -> tuple:
+        """(path, mtime) of the files version ``version``'s schema is
+        read from: the cow snapshot, or the mor manifest's FIRST segment
+        — its base, which only create/replace/compact rewrite; later
+        segments append behind it with the same columns (strict mode)."""
+        if self.mode == "cow":
+            path = self._snapshot_path(version)
+        else:
+            seg = self._read_manifest(version)["segments"][0]["path"]
+            path = os.path.join(self.root, seg)
+        try:
+            return path, os.stat(path).st_mtime_ns
+        except OSError:  # vacuumed or never written: the read raises
+            return path, None
+
+    def _schema(self, version: int):
+        """The explicit schema for every segment read of ``version``, or
+        None under schema_evolution, where segments differ and each read
+        infers. A schema-less ``spark.read.parquet`` pays a schema
+        inference JOB, and a fragmented mor read builds one reader per
+        live file set, so inferring per read cost O(files) driver jobs
+        per plan (r14). The memo is keyed by the source files' path and
+        mtime, so a time-travel read, a sibling's replace and a drop +
+        re-create at the same version number all re-infer, while a mor
+        insert/update/delete keeps its base segment and stays a hit. The
+        commit path carries the entry across this handle's own
+        schema-preserving commits (see :meth:`_publish`)."""
+        if self.schema_evolution:
+            return None
+        key = self._schema_key(version)
+        return self._schema_memo.get(
+            key, lambda: self.spark.read.parquet(key[0]).schema
+        )
 
     def _check_schema(self, rows: DataFrame) -> None:
         """Strict mode fails FAST on column drift — mor would otherwise
@@ -172,7 +255,8 @@ class SnapshotStore:
         # silently accept type drift (e.g. a long column flipping to
         # double via coalesce(..., 0.0)) and the store's schema changes
         # out from under readers on the first merge
-        base = sorted((f.name, f.dataType.simpleString()) for f in self._table_schema().fields)
+        schema = self._schema(self.current_version())
+        base = sorted((f.name, f.dataType.simpleString()) for f in schema.fields)
         new = sorted((f.name, f.dataType.simpleString()) for f in rows.schema.fields)
         if base != new:
             raise ValueError(
@@ -479,10 +563,7 @@ class SnapshotStore:
                 if pointer["version"] != v:  # pragma: no cover — claim held
                     continue
                 pointer["meta"] = {**pointer.get("meta", {}), **meta}
-                tmp = self._pointer + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump(pointer, f)
-                os.replace(tmp, self._pointer)
+                self._publish(pointer)
                 return pointer["version"]
             finally:
                 # release: the version was never published, so the next
@@ -571,7 +652,8 @@ class SnapshotStore:
         return freed
 
     def _commit(
-        self, df: DataFrame, meta: dict | None = None, base_version: int | None = None
+        self, df: DataFrame, meta: dict | None = None,
+        base_version: int | None = None, new_schema: bool = False,
     ) -> int:
         """C5 — flush/persist barrier (``collection.flush()``,
         ``Milvus/stream1.py:226``): write the new snapshot fully, then
@@ -583,7 +665,8 @@ class SnapshotStore:
         published after our read, base+1 is already claimed and we raise
         instead of committing a snapshot derived from stale state — the
         anti-join/dedup/merge inside the mutation would otherwise
-        silently drop the concurrent writer's rows."""
+        silently drop the concurrent writer's rows. ``new_schema``: the
+        commit may change the table schema (create/replace)."""
         version = (
             base_version + 1 if base_version is not None else self.current_version() + 1
         )
@@ -614,20 +697,35 @@ class SnapshotStore:
                 self._footer_cluster_counts(path),
                 os.path.basename(path),
             )
+        self._publish(
+            {
+                "version": version,
+                "path": os.path.basename(path),
+                "ts": time.time(),
+                "rows": int(obs.get.get("cnt") or 0),
+                "meta": self._merged_meta(meta),
+            },
+            None if new_schema else version - 1,
+        )
+        return version
+
+    def _publish(self, pointer: dict, base: int | None = None) -> None:
+        """Atomically swap the version pointer (write-temp + rename).
+        ``base`` is the version a schema-preserving commit read: every
+        commit but create/replace, since its rows passed _check_schema
+        or it only dropped rows. The schema memo then moves from base's
+        key to the new version's, so this handle's next read pays no
+        inference job. Both keys are taken before the swap, while base
+        is still current and no vacuum can remove it."""
+        keys = None
+        if base is not None:
+            keys = self._schema_key(base), self._schema_key(pointer["version"])
         tmp = self._pointer + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "path": os.path.basename(path),
-                    "ts": time.time(),
-                    "rows": int(obs.get.get("cnt") or 0),
-                    "meta": self._merged_meta(meta),
-                },
-                f,
-            )
+            json.dump(pointer, f)
         os.replace(tmp, self._pointer)
-        return version
+        if keys is not None:
+            self._schema_memo.rekey(*keys)
 
     # -- merge-on-read manifest bookkeeping ---------------------------------
 
@@ -646,6 +744,7 @@ class SnapshotStore:
         version: int | None = None,
         rows: int | None = None,
         cluster_counts: dict | None = None,
+        new_schema: bool = False,
     ) -> int:
         """C5 barrier, mor flavor: the new segment/tombstone files are
         fully written before the manifest that references them appears;
@@ -664,7 +763,8 @@ class SnapshotStore:
         no-shadowing guarantee; the relayout upsert knows its own moved
         deltas). Stamped with the ``v<version>`` token — mutations that
         CANNOT know them (delete/update/plain upsert) pass None and the
-        carried-forward token goes stale, reading as absent."""
+        carried-forward token goes stale, reading as absent.
+        ``new_schema`` as in :meth:`_commit`."""
         if version is None:  # legacy single-writer path
             version = self.current_version() + 1
             self._claim_version(version)
@@ -673,22 +773,19 @@ class SnapshotStore:
             json.dump(
                 {"version": version, "segments": segments, "tombstones": tombstones}, f
             )
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "mode": self.mode,
-                    "ts": time.time(),
-                    # exact live row count when the mutation can derive
-                    # it O(1) (see tracked_rows()); None = unknown until
-                    # the next compact()/create() re-materializes
-                    "rows": rows,
-                    "meta": self._merged_meta(meta),
-                },
-                f,
-            )
-        os.replace(tmp, self._pointer)
+        self._publish(
+            {
+                "version": version,
+                "mode": self.mode,
+                "ts": time.time(),
+                # exact live row count when the mutation can derive
+                # it O(1) (see tracked_rows()); None = unknown until
+                # the next compact()/create() re-materializes
+                "rows": rows,
+                "meta": self._merged_meta(meta),
+            },
+            None if new_schema else version - 1,
+        )
         if self.compact_when is not None and (
             len(segments) + len(tombstones) > self.compact_when
         ):
@@ -819,7 +916,7 @@ class SnapshotStore:
                 f,
             )
 
-    def _probe_hashes(self, keys: list) -> list[tuple[int, int]]:
+    def _probe_hashes(self, keys: list, version: int) -> list[tuple[int, int]]:
         """(h1, h2) per probe key via the same Catalyst exprs as the
         build — one tiny job over the (contract-bounded) probe set.
 
@@ -830,9 +927,8 @@ class SnapshotStore:
         false negative that DROPS matching rows, unlike isin which
         coerces (r7 ADVICE). Casting to the stored type first makes
         both sides stringify the same value."""
-        key_type = next(
-            f.dataType for f in self._table_schema().fields if f.name == self.key
-        )
+        schema = self._schema(version) or self.read(version).schema
+        key_type = schema[self.key].dataType
         kdf = self.spark.createDataFrame([(k,) for k in keys], [self.key])
         kdf = kdf.withColumn(self.key, F.col(self.key).cast(key_type))
         return [(r._h1, r._h2) for r in kdf.select(*self._key_hash_cols()).collect()]
@@ -913,14 +1009,18 @@ class SnapshotStore:
 
     # -- reads --------------------------------------------------------------
 
-    def read(self, version: int | None = None) -> DataFrame:
+    def _version(self, version: int | None) -> int:
         v = self.current_version() if version is None else version
         if v == 0:
             raise ValueError(f"snapshot store {self.root} is empty")
+        return v
+
+    def read(self, version: int | None = None) -> DataFrame:
+        v = self._version(version)
         if self.mode == "cow":
-            return self._read_seg(self._snapshot_path(v), self._strict_schema())
+            return self._read_seg(self._snapshot_path(v), self._schema(v))
         m = self._read_manifest(v)
-        return self._merge_files(m["segments"], m["tombstones"])
+        return self._merge_files(m["segments"], m["tombstones"], v)
 
     @staticmethod
     def _zone_hits(entries: list[dict], lo, hi) -> list[dict]:
@@ -945,15 +1045,13 @@ class SnapshotStore:
         rng = F.col(self.key).between(lo, hi)
         if self.mode == "cow":
             return self.read(version).filter(rng)
-        v = self.current_version() if version is None else version
-        if v == 0:
-            raise ValueError(f"snapshot store {self.root} is empty")
+        v = self._version(version)
         m = self._read_manifest(v)
         segs = self._zone_hits(m["segments"], lo, hi)
         tombs = self._zone_hits(m["tombstones"], lo, hi)
         if not segs:
             return self.read(version).filter(rng).limit(0)  # typed empty
-        return self._merge_files(segs, tombs).filter(rng)
+        return self._merge_files(segs, tombs, v).filter(rng)
 
     def read_where_key_in(self, keys: list, version: int | None = None) -> DataFrame:
         """Point-set read with manifest-level skipping, two layers deep:
@@ -974,9 +1072,7 @@ class SnapshotStore:
         pred = F.col(self.key).isin(list(keys))
         if self.mode == "cow":
             return self.read(version).filter(pred)
-        v = self.current_version() if version is None else version
-        if v == 0:
-            raise ValueError(f"snapshot store {self.root} is empty")
+        v = self._version(version)
         m = self._read_manifest(v)
 
         def hits(entries):
@@ -990,12 +1086,12 @@ class SnapshotStore:
         segs = hits(m["segments"])
         tombs = hits(m["tombstones"])
         if any(e.get("bloom") for e in segs + tombs):
-            hashes = self._probe_hashes(list(keys))
+            hashes = self._probe_hashes(list(keys), v)
             segs = self._bloom_keep(segs, hashes)
             tombs = self._bloom_keep(tombs, hashes)
         if not segs:
             return self.read(version).filter(pred).limit(0)
-        return self._merge_files(segs, tombs).filter(pred)
+        return self._merge_files(segs, tombs, v).filter(pred)
 
     def read_where_between(self, col: str, lo, hi, version: int | None = None) -> DataFrame:
         """Data skipping on a NON-KEY predicate column: segments whose
@@ -1025,9 +1121,7 @@ class SnapshotStore:
             # single snapshot, no shadowing: parquet row-group stats do
             # the file-level skipping under the pushed filter
             return self.read(version).filter(pred)
-        v = self.current_version() if version is None else version
-        if v == 0:
-            raise ValueError(f"snapshot store {self.root} is empty")
+        v = self._version(version)
         m = self._read_manifest(v)
         segs = m["segments"]
 
@@ -1050,22 +1144,7 @@ class SnapshotStore:
         kept = [e for e in segs if not (value_misses(e) and not may_shadow(e))]
         if not kept:
             return self.read(version).filter(pred).limit(0)
-        return self._merge_files(kept, m["tombstones"]).filter(pred)
-
-    def _strict_schema(self):
-        """The table schema for EXPLICIT-schema segment reads, or None.
-        Every schema-less ``spark.read.parquet`` pays a schema-inference
-        JOB, and a fragmented mor read builds one reader per live file
-        set — O(files) driver jobs per plan construction (r14). In
-        strict mode (no schema_evolution) every segment carries the
-        table schema by the _check_schema contract and the schema is
-        version-invariant, so one cached inference serves every read;
-        create/drop/replace (the operations that can establish a new
-        schema) invalidate. Under schema_evolution segments genuinely
-        differ — always infer there."""
-        if self.schema_evolution:
-            return None
-        return self._schema_cache[1] if self._schema_cache is not None else None
+        return self._merge_files(kept, m["tombstones"], v).filter(pred)
 
     def _read_seg(self, path: str, schema):
         r = self.spark.read
@@ -1073,15 +1152,13 @@ class SnapshotStore:
             r = r.schema(schema)
         return r.parquet(path)
 
-    def _merge_files(self, segs: list[dict], tombs: list[dict]) -> DataFrame:
-        dschema = self._strict_schema()
+    def _merge_files(self, segs: list[dict], tombs: list[dict], version: int) -> DataFrame:
+        dschema = self._schema(version)
         if len(segs) == 1 and not tombs:  # compacted fast path: plain scan
             return self._read_seg(os.path.join(self.root, segs[0]["path"]), dschema)
         data = None
         for s in segs:
             part = self._read_seg(os.path.join(self.root, s["path"]), dschema)
-            if dschema is None and not self.schema_evolution:
-                dschema = part.schema  # one inference serves the rest
             part = part.withColumn("_seq", F.lit(int(s["seq"])))
             data = part if data is None else self._union(data, part)
         # last-wins per key across segments (upsert lands as a newer segment)
@@ -1130,17 +1207,12 @@ class SnapshotStore:
         are manifests, not single directories — use :meth:`read`."""
         if self.mode != "cow":
             raise ValueError("snapshot_dir is cow-only; mor state is a manifest")
-        v = self.current_version() if version is None else version
-        if v == 0:
-            raise ValueError(f"snapshot store {self.root} is empty")
+        v = self._version(version)
         return self._snapshot_path(v)
 
     # -- mutations (each returns the new version) ---------------------------
 
     def create(self, df: DataFrame, meta: dict | None = None) -> int:
-        # a create can establish a NEW schema (fresh store, or re-create
-        # after drop) — the strict-mode schema cache must not survive it
-        self._schema_cache = None
         if self.mode == "mor":
             v = self.current_version() + 1
             self._claim_version(v)
@@ -1152,8 +1224,9 @@ class SnapshotStore:
                 version=v,
                 rows=cnt,
                 cluster_counts=self._seg_cluster_counts(df, seg),
+                new_schema=True,
             )
-        return self._commit(df, meta=meta)
+        return self._commit(df, meta=meta, new_schema=True)
 
     def _seg_cluster_counts(self, df: DataFrame, seg: str) -> dict | None:
         """Per-cluster counts of one just-written mor segment, or None
@@ -1427,10 +1500,6 @@ class SnapshotStore:
         relayout), skipping the mutation-clock bump."""
         if not self.exists():
             return self.create(df, meta=meta)
-        # replace is the one published-store mutation that bypasses
-        # _check_schema (wholesale rewrite) — it may change the schema,
-        # so the strict-mode cache must not survive it either
-        self._schema_cache = None
         if not content_preserving:
             meta = self._bump_mutation("replaces", meta)
         base_v = self.current_version()
@@ -1445,8 +1514,9 @@ class SnapshotStore:
                 version=v,
                 rows=cnt,
                 cluster_counts=self._seg_cluster_counts(df, seg),
+                new_schema=True,
             )
-        return self._commit(df, meta=meta, base_version=base_v)
+        return self._commit(df, meta=meta, base_version=base_v, new_schema=True)
 
     def compact(self) -> int:
         """Fold a mor table back to one segment and zero tombstones —
@@ -1472,7 +1542,6 @@ class SnapshotStore:
     def drop(self) -> None:
         """C6 — drop collection (``utility.drop_collection``,
         ``Milvus/stream1.py:516``)."""
-        self._schema_cache = None
         shutil.rmtree(self.root, ignore_errors=True)
 
     def vacuum(self, keep_last: int = 1) -> list[int]:

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from deployment_spark.functions.vector import cosine_similarity
+from deployment_spark.operators.crud import Memo
 from deployment_spark.operators.similarity import (
     DEFAULT_MAX_CLUSTER_ROWS_PER_TASK as DEFAULT_SALT_BOUND,
 )
@@ -120,9 +121,9 @@ class IVFIndex:
         self.spark = spark
         self.root = root
         self._data_override = data_path
-        # (data_path, {cluster_id: rows}) memo for cluster_counts — the
-        # file itself is keyed by the same token, see write_cluster_stats
-        self._stats_cache: tuple[str, dict] | None = None
+        # {cluster_id: rows} keyed by the data path, like the persisted
+        # stats file (see write_cluster_stats)
+        self._counts = Memo()
 
     @property
     def _data_path(self) -> str:
@@ -360,8 +361,7 @@ class IVFIndex:
             # read-only index root: keep the in-memory memo for this
             # process; the next process recomputes (one footer-level job)
             pass
-        self._stats_cache = (self._data_path, counts)
-        return counts
+        return self._counts.put(self._data_path, counts)
 
     def cluster_counts(self, refresh_if_missing: bool = False) -> dict | None:
         """``{cluster_id: rows}`` from metadata — an O(1) lookup, no
@@ -373,23 +373,20 @@ class IVFIndex:
         so a fresh process on a READ-ONLY index root still gets a free
         lookup. Returns None on a miss unless ``refresh_if_missing``,
         which computes + persists once."""
-        cache = self._stats_cache
-        if cache is not None and cache[0] == self._data_path:
-            return cache[1]
+        counts = self._counts.get(self._data_path, self._stored_counts)
+        if counts is None and refresh_if_missing:
+            return self.write_cluster_stats()
+        return counts
+
+    def _stored_counts(self) -> dict | None:
         try:
             with open(self._cluster_stats_path) as f:
                 d = json.load(f)
             if d.get("data_token") != self._data_path:
                 raise ValueError("stale cluster stats (data path changed)")
-            counts = {int(k): int(v) for k, v in d["counts"].items()}
+            return {int(k): int(v) for k, v in d["counts"].items()}
         except (OSError, ValueError, KeyError, TypeError):
-            counts = self._embedded_store_counts()
-            if counts is None:
-                if not refresh_if_missing:
-                    return None
-                return self.write_cluster_stats()
-        self._stats_cache = (self._data_path, counts)
-        return counts
+            return self._embedded_store_counts()
 
     def _embedded_store_counts(self) -> dict | None:
         """Counts a SnapshotStore commit embedded for OUR data path

@@ -71,6 +71,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from deployment_spark.operators.crud import Memo, parquet_rows
+
 
 class TokenIVFIndex:
     """Persisted, maintainable IVF index over long-format token vectors
@@ -90,11 +92,7 @@ class TokenIVFIndex:
         self.stats_dir = self.root + "/stats"
         self.tombstones_dir = self.root + "/tombstones"
         self._nlist_arg = None if nlist is None else int(nlist)
-        # per-instance stats cache, same contract as BM25Index: stats
-        # only grow under this instance's writes (each invalidates),
-        # absence is never cached, cross-instance writers need a fresh
-        # handle (the maintainer constructs one per batch)
-        self._stats_cache: list | None = None
+        self._stats = Memo()  # stats partials, keyed by the dir's listing
 
     # -- quantizer ----------------------------------------------------------
 
@@ -146,7 +144,6 @@ class TokenIVFIndex:
         fs, hp = self._fs()
         fs.delete(hp(self.stats_dir), True)
         fs.delete(hp(self.tombstones_dir), True)
-        self._invalidate_stats()
         self._append_stats(rows, src_clock)
         self._set_marker(False)
         return self
@@ -200,7 +197,6 @@ class TokenIVFIndex:
             ),
         )
         stat.coalesce(1).write.mode("append").parquet(self.stats_dir)
-        self._invalidate_stats()
 
     def reindex(
         self,
@@ -442,23 +438,21 @@ class TokenIVFIndex:
         the scale input of ``reference_k_per_token``, O(1) driver work
         (plus one O(deleted) sum when tombstones exist)."""
         base = sum(int(r["n_tokens"]) for r in self._stats_rows())
-        t = self._tombstones()
-        if t is not None:
-            base -= int(t.agg(F.coalesce(F.sum("n_toks"), F.lit(0))).collect()[0][0])
-        return max(base, 0)
+        return max(base - self._dead_tokens(self._tombstones()), 0)
+
+    def _dead_tokens(self, t: DataFrame | None) -> int:
+        """Tombstoned token count of the tombstone frame ``t`` — the
+        stats correction; 0 without tombstones."""
+        if t is None:
+            return 0
+        return int(t.agg(F.coalesce(F.sum("n_toks"), F.lit(0))).collect()[0][0])
 
     # -- staleness contract ------------------------------------------------------
 
     def _stats_rows(self) -> list:
-        if not self._stats_cache:  # absence is never cached
-            try:
-                self._stats_cache = self.spark.read.parquet(self.stats_dir).collect()
-            except Exception:
-                self._stats_cache = []
-        return self._stats_cache
-
-    def _invalidate_stats(self) -> None:
-        self._stats_cache = None
+        """Every stats partial, collected once per listing of the stats
+        dir — the same read as ``BM25Index._stats_rows``."""
+        return parquet_rows(self.spark, self._stats, self.stats_dir)
 
     def pinned_src_clock(self) -> dict | None:
         best_seq, best_clock = None, None
@@ -481,7 +475,6 @@ class TokenIVFIndex:
             [(0, None, int(src_clock.get("seq", 0)), json.dumps(src_clock))],
             "n_tokens long, max_doc_id long, src_seq long, src_clock string",
         ).coalesce(1).write.mode("append").parquet(self.stats_dir)
-        self._invalidate_stats()
 
     def max_indexed_id(self) -> int | None:
         ids = [
@@ -562,12 +555,7 @@ class TokenIVFIndex:
         k_per_token slots only until the anti-join drops them, but the
         anti-join itself is the O(deleted) per-query cost compaction
         exists to fold away."""
-        t = self._tombstones()
-        dead = (
-            0
-            if t is None
-            else int(t.agg(F.coalesce(F.sum("n_toks"), F.lit(0))).collect()[0][0])
-        )
+        dead = self._dead_tokens(self._tombstones())
         base = sum(int(r["n_tokens"]) for r in self._stats_rows())
         return dead, max(base - dead, 0)
 
@@ -578,9 +566,7 @@ class TokenIVFIndex:
         maintenance marker — a crash anywhere inside reads as absent
         and the rebuild contract recovers."""
         t = self._tombstones()
-        corr = 0
-        if t is not None:
-            corr = int(t.agg(F.coalesce(F.sum("n_toks"), F.lit(0))).collect()[0][0])
+        corr = self._dead_tokens(t)
         live = self._live(self.spark.read.parquet(self.tokens_dir), tombstones=t)
         stats = self._stats_rows()
         n_tokens = sum(int(r["n_tokens"]) for r in stats) - corr
@@ -608,6 +594,5 @@ class TokenIVFIndex:
         fs.rename(hp(self.stats_dir), hp(old))
         fs.rename(hp(tmp), hp(self.stats_dir))
         fs.delete(hp(old), True)
-        self._invalidate_stats()
         fs.delete(hp(self.tombstones_dir), True)
         self._set_marker(False)

@@ -247,11 +247,11 @@ def test_stale_base_read_fails_claim(spark, tmp_path, mode):
     a = SnapshotStore(spark, root, key="id", mode=mode)
     b = SnapshotStore(spark, root, key="id", mode=mode)
     a.create(mk(spark, [(1, "a"), (2, "b")]))
-    # prime the version-keyed schema memo: _check_schema also does a
-    # version-pinned read, and it runs BEFORE the mutation captures
-    # base_v — unprimed, the hook would fire there and B's commit would
-    # land before the stale-base window even opens (r7 harness drift)
-    a._table_schema()
+    # prime the schema memo: _check_schema runs BEFORE the mutation
+    # captures base_v — had it a version-pinned read, the hook would
+    # fire there and B's commit would land before the stale-base window
+    # even opens (r7 harness drift)
+    a._schema(a.current_version())
     base_v = a.current_version()
 
     orig_read = a.read
@@ -1095,6 +1095,65 @@ def test_replace_rewrites_snapshot_both_modes(spark, tmp_path):
         # and mutations compose on top of the replaced content
         store.insert(spark.createDataFrame([(9, "z")], "k long, v string"))
         assert store.count() == 3
+
+
+def _columns_rows(df):
+    return df.columns, sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_time_travel_read_after_own_schema_changing_replace(spark, tmp_path, mode):
+    """A read of a version from before this handle's own schema-changing
+    replace() must use THAT version's schema: the strict-mode schema
+    memo is keyed by the files it was read from, not shared across
+    versions (a version-blind memo returned ['id', 'b'] with NULLs)."""
+    root = str(tmp_path / f"tt_{mode}")
+    a = SnapshotStore(spark, root, key="id", mode=mode)
+    a.create(spark.createDataFrame([(1, "x"), (2, "y"), (3, "z")], "id long, a string"))
+    v_old = a.current_version()
+    a.replace(spark.createDataFrame([(1, "p")], "id long, b string"))
+    a.insert(spark.createDataFrame([(4, "q")], "id long, b string"))
+    got = _columns_rows(a.read(v_old))
+    fresh = _columns_rows(SnapshotStore(spark, root, key="id", mode=mode).read(v_old))
+    assert got == fresh == (["id", "a"], [(1, "x"), (2, "y"), (3, "z")])
+    # and the current version still reads with its own schema
+    assert _columns_rows(a.read()) == (["id", "b"], [(1, "p"), (4, "q")])
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_long_lived_handle_sees_sibling_replace(spark, tmp_path, mode):
+    """A long-lived handle whose schema memo is warm must read a sibling
+    instance's schema-changing replace() like a fresh handle does (a
+    memo that only its own writes reset returned [(7, None)])."""
+    root = str(tmp_path / f"sib_{mode}")
+    a = SnapshotStore(spark, root, key="id", mode=mode)
+    a.create(spark.createDataFrame([(1, "x")], "id long, b string"))
+    a.insert(spark.createDataFrame([(2, "y")], "id long, b string"))
+    a.read().collect()
+    SnapshotStore(spark, root, key="id", mode=mode).replace(
+        spark.createDataFrame([(7, "q")], "id long, c string")
+    )
+    got = _columns_rows(a.read())
+    fresh = _columns_rows(SnapshotStore(spark, root, key="id", mode=mode).read())
+    assert got == fresh == (["id", "c"], [(7, "q")])
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_long_lived_handle_sees_drop_and_recreate(spark, tmp_path, mode):
+    """drop() + create() by other handles restarts the version numbers,
+    so a memo keyed by the version number alone would serve the dropped
+    table's schema to the re-created one; the key also carries the
+    source files' mtime."""
+    root = str(tmp_path / f"drop_{mode}")
+    a = SnapshotStore(spark, root, key="id", mode=mode)
+    a.create(spark.createDataFrame([(1, "x")], "id long, a string"))
+    a.read().collect()
+    SnapshotStore(spark, root, key="id", mode=mode).drop()
+    SnapshotStore(spark, root, key="id", mode=mode).create(
+        spark.createDataFrame([(5, "n")], "id long, d string")
+    )
+    assert a.current_version() == 1
+    assert _columns_rows(a.read()) == (["id", "d"], [(5, "n")])
 
 
 def test_commit_embedded_cluster_counts_lifecycle(spark, tmp_path):

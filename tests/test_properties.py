@@ -738,7 +738,8 @@ def test_keyset_pages_tile_ranking_random(spark, n, nq, k, dim, seed):
     ops=st.lists(
         st.tuples(
             st.sampled_from(
-                ["insert", "upsert", "delete", "compact", "vacuum", "meta"]
+                ["insert", "upsert", "delete", "compact", "vacuum", "meta",
+                 "sibling"]
             ),
             st.integers(min_value=0, max_value=9),
         ),
@@ -754,63 +755,93 @@ def test_snapshot_store_matches_dict_model(spark, tmp_path_factory, ops, mode, s
     mutations and maintenance against a plain dict model: after every
     op, read() == model, point reads (zone + bloom skipping on mor) ==
     model, versions move strictly forward, and commit meta is carried
-    forward (never erased by compact/vacuum/meta-less mutations)."""
+    forward (never erased by compact/vacuum/meta-less mutations).
+    ``sibling`` runs the next mutation through a second long-lived
+    handle on the same root; after every op the first handle's read()
+    must equal a fresh handle's, and a time-travel read of a random
+    surviving earlier version must equal the model recorded there —
+    the driver-side caches are keyed by durable state, so neither a
+    sibling's commits nor an old version can serve a stale entry."""
     import random
 
     from deployment_spark.operators.crud import SnapshotStore
 
     rng = random.Random(seed)
     root = str(tmp_path_factory.mktemp("prop_store"))
-    store = SnapshotStore(
-        spark, root, key="id", mode=mode,
-        compact_when=4 if mode == "mor" else None,
-        # tiny bloom (16 words): high fp rate on purpose — fp must only
-        # cost a scan; the model check catches any wrong skip
-        bloom_bits=1 << 10 if mode == "mor" else None,
-    )
+
+    def handle():
+        return SnapshotStore(
+            spark, root, key="id", mode=mode,
+            compact_when=4 if mode == "mor" else None,
+            # tiny bloom (16 words): high fp rate on purpose — fp must only
+            # cost a scan; the model check catches any wrong skip
+            bloom_bits=1 << 10 if mode == "mor" else None,
+        )
+
+    store = handle()
+    sibling = handle()  # long-lived too: its memos must not go stale
     model: dict[int, str] = {}
     meta_model: dict = {}
+    history: dict[int, dict] = {}  # version -> model at that version
     next_id = 0
     last_version = 0
+    to_sibling = False
 
     def mk_rows(pairs):
         return spark.createDataFrame(pairs, "id long, payload string")
 
     for op, arg in ops:
+        if op == "sibling":
+            to_sibling = True
+            continue
+        w = sibling if to_sibling else store
+        to_sibling = False
         if op == "insert":
             rows = [(next_id + i, f"p{seed}-{next_id + i}") for i in range(arg + 1)]
             next_id += len(rows)
-            if store.exists():
-                store.insert(mk_rows(rows))
+            if w.exists():
+                w.insert(mk_rows(rows))
             else:
-                store.create(mk_rows(rows))
+                w.create(mk_rows(rows))
             for k, v in rows:
                 model.setdefault(k, v)
         elif op == "upsert" and model:
             ks = rng.sample(sorted(model), min(arg + 1, len(model)))
             rows = [(k, f"u{seed}-{k}-{arg}") for k in ks]
-            store.upsert(mk_rows(rows))
+            w.upsert(mk_rows(rows))
             model.update(dict(rows))
         elif op == "delete" and model:
             ks = rng.sample(sorted(model), min(arg + 1, len(model)))
-            store.delete_ids(ks)
+            w.delete_ids(ks)
             for k in ks:
                 model.pop(k)
-        elif op == "compact" and store.exists():
-            store.compact()
-        elif op == "vacuum" and store.exists():
-            store.vacuum(keep_last=rng.choice([1, 2, 5]))
-        elif op == "meta" and store.exists():
+        elif op == "compact" and w.exists():
+            w.compact()
+        elif op == "vacuum" and w.exists():
+            keep = rng.choice([1, 2, 5])
+            w.vacuum(keep_last=keep)
+            history = {
+                hv: m for hv, m in history.items()
+                if hv > w.current_version() - keep
+            }
+        elif op == "meta" and w.exists():
             new = {f"k{arg % 3}": arg}
-            store.update_meta(new)
+            w.update_meta(new)
             meta_model.update(new)
         if not store.exists():
             continue
         v = store.current_version()
         assert v >= last_version, (v, last_version)
+        for hv in range(last_version + 1, v + 1):
+            history[hv] = dict(model)
         last_version = v
         got = {r.id: r.payload for r in store.read().collect()}
         assert got == model, (op, arg, len(got), len(model))
+        fresh = {r.id: r.payload for r in handle().read().collect()}
+        assert fresh == got, (op, arg)
+        tv = rng.choice(sorted(history))
+        got_tv = {r.id: r.payload for r in store.read(tv).collect()}
+        assert got_tv == history[tv], (op, arg, tv)
         # point read through the skipping stack: present keys, a deleted/
         # never-inserted key, mixed — must equal the model's view exactly
         probe = rng.sample(sorted(model), min(2, len(model))) if model else []

@@ -375,6 +375,34 @@ def test_bm25_index_torn_stats_raises_contract_error(spark, corpus_docs, tmp_pat
     with pytest.raises(FileNotFoundError, match="no BM25 index"):
         idx.search_scores(["common"])
 
+
+def test_bm25_index_tombstone_correction_matches_antijoin(spark, corpus_docs, tmp_path):
+    """The N/sum_dl tombstone correction and the live-postings anti-join
+    must describe ONE tombstone set. A sibling's delete() lands inside
+    the search, after the tombstone frame was read and before the
+    correction: the scores must equal a fresh handle's search over the
+    tombstones the anti-join used (the sibling's kill excluded from
+    both), not a correction for a doc that still scores."""
+    from deployment_spark.operators.retrieval import BM25Index
+
+    root = str(tmp_path / "idx")
+    _built(spark, corpus_docs, tmp_path / "idx")
+    assert BM25Index(spark, root).delete([3]) == 1
+    terms = ["common", "mid2", "rareterm"]
+    want = _score_map(BM25Index(spark, root).search_scores(terms))
+
+    idx = BM25Index(spark, root)
+    live_postings = idx._live_postings
+    landed = []
+
+    def sibling_delete_lands(postings, tombstones):
+        landed.append(BM25Index(spark, root).delete([7]))
+        return live_postings(postings, tombstones=tombstones)
+
+    idx._live_postings = sibling_delete_lands
+    assert _score_map(idx.search_scores(terms)) == want
+    assert landed == [1]
+
 def test_bm25_index_legacy_stats_compact_and_rebucket(spark, corpus_docs, tmp_path):
     """r12 ADVICE: pre-r12 stats partials carry no src_seq/src_clock
     columns; _fold_stats aggregated them unconditionally, raising AFTER

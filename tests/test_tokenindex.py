@@ -245,6 +245,25 @@ def test_token_index_torn_maintenance_reads_absent(spark, tmp_path, doc_batches)
     assert tidx.exists()
 
 
+def test_token_index_long_lived_handle_sees_sibling_append(
+    spark, tmp_path, doc_batches
+):
+    """A long-lived handle must see a sibling instance's append in its
+    stats answers: the stats memo is keyed by the stats dir's listing,
+    not reset by this handle's own writes only (a handle that cached
+    its stats served the pre-append count and pin forever)."""
+    root = str(tmp_path / "sib_idx")
+    tidx = TokenIVFIndex(spark, root, nlist=8).build(
+        _tokens_fn(doc_batches[0]), src_clock={"seq": 1}
+    )
+    assert (tidx.n_tokens(), tidx.pinned_src_clock()) == (160, {"seq": 1})
+    TokenIVFIndex(spark, root).append(
+        _tokens_fn(doc_batches[1]), src_clock={"seq": 2}
+    )
+    assert (tidx.n_tokens(), tidx.pinned_src_clock()) == (320, {"seq": 2})
+    assert tidx.max_indexed_id() == 159
+
+
 def test_token_index_delete_and_compact(spark, tmp_path, doc_batches):
     tidx = TokenIVFIndex(spark, str(tmp_path / "tc_idx"), nlist=8).build(
         _tokens_fn(doc_batches[0])
