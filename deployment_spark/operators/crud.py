@@ -1541,8 +1541,11 @@ class SnapshotStore:
 
     def drop(self) -> None:
         """C6 — drop collection (``utility.drop_collection``,
-        ``Milvus/stream1.py:516``)."""
+        ``Milvus/stream1.py:516``). The empty root is re-made, as
+        ``__init__`` made it, so this handle can create the collection
+        again (the reference drops, then re-creates)."""
         shutil.rmtree(self.root, ignore_errors=True)
+        os.makedirs(self.root, exist_ok=True)
 
     def vacuum(self, keep_last: int = 1) -> list[int]:
         """Remove snapshot versions older than the newest ``keep_last``

@@ -105,6 +105,16 @@ PRUNE_ISIN_MAX = 16384
 POSTFILTER_MARGIN = 2.0
 
 
+def check_routing(routing: str, allowed: tuple) -> None:
+    """Reject a ``routing`` value outside ``allowed``. Fail loudly: a
+    typo'd routing must not silently fall through to the driver collect
+    a batch caller is avoiding."""
+    if routing not in allowed:
+        raise ValueError(
+            f"unknown routing {routing!r}: expected {' | '.join(allowed)}"
+        )
+
+
 class IVFIndex:
     """Partitioned-parquet IVF index: ``root/data/cluster_id=*/...`` plus
     ``root/centroids.json``."""
@@ -151,7 +161,7 @@ class IVFIndex:
         """Train k-means (optionally on a sample — at 100 TB you never
         k-means the full corpus), assign clusters, write partitioned."""
         from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector, vector_to_array
+        from pyspark.ml.functions import array_to_vector
 
         n = df.count()
         k = nlist or reference_nlist(n)
@@ -410,8 +420,8 @@ class IVFIndex:
             return None
 
     def batch_prune_plan(self, probes, nprobe: int):
-        """Shared prune + salt decision of the four batch routes (r10,
-        VERDICT r9 #1/#2). Returns ``(probed, counts)``:
+        """Prune + salt decision of :meth:`probe_batch` (r10, VERDICT r9
+        #1/#2). Returns ``(probed, counts)``:
 
         - ``probed``: the collected distinct probed cluster-id list
           (nlist-bounded by construction — the only query-derived state
@@ -653,10 +663,11 @@ class IVFIndex:
         query_id: str = "query_id",
         query_vec: str = "query_vec",
     ) -> tuple[list, list]:
-        """Driver-side centroid routing shared by IVF and IVF×PQ search:
-        (query_id, cluster_id) pairs for each query's top-nprobe nearest
-        centroids (cosine on the normalized centroid set), plus the
-        sorted union of probed clusters for partition pruning."""
+        """Driver-side centroid routing (the driver route of
+        :meth:`probe`): (query_id, cluster_id) pairs for each query's
+        top-nprobe nearest centroids (cosine on the normalized centroid
+        set), plus the sorted union of probed clusters for partition
+        pruning."""
         cents = self.centroids()
         nprobe = min(nprobe, cents.shape[0])
         qn = cents / np.maximum(
@@ -669,6 +680,133 @@ class IVFIndex:
             order = np.argsort(-(qn @ v))[:nprobe]
             routing.extend((r[query_id], int(c)) for c in order)
         return routing, sorted({c for _, c in routing})
+
+    # -- probe: the routing + pruning step of every IVF-family search ---------
+
+    def probe(
+        self,
+        queries: DataFrame,
+        nprobe: int,
+        routing: str = "auto",
+        query_id: str = "query_id",
+        query_vec: str = "query_vec",
+        qrows: list | None = None,
+    ) -> tuple[DataFrame | None, list]:
+        """Interactive probe step of every IVF-family search (FAISS's
+        shared ``quantizer->search``): the (query_id, cluster_id) routing
+        frame of each query's top-``nprobe`` lists, plus the sorted
+        probed-cluster list the caller prunes its scan to; ``(None, [])``
+        for an empty query batch.
+
+        'driver' routes through :meth:`route` against the in-RAM
+        centroid set (the FAISS contract, right for nlist ≤ 100).
+        'distributed' routes through :meth:`route_distributed` with NO
+        driver-side centroid collect: the routing frame is checkpointed
+        once (it feeds the probed-id collect and the caller's join), and
+        only the PROBED ids reach the driver (≤ nq × nprobe ints), so the
+        path stays driver-safe at nlist ≈ √n = 10⁴-10⁵. 'auto' picks
+        driver at or below AUTO_DISTRIBUTED_NLIST, distributed above.
+
+        ``qrows``: the batch's (query_id, query_vec) rows when the caller
+        already collected them (the codec searches build LUTs or query
+        broadcasts from them); otherwise the driver route's collect is
+        the emptiness check and the distributed route runs one
+        ``isEmpty``."""
+        if routing == "auto":
+            routing = "driver" if self.nlist() <= AUTO_DISTRIBUTED_NLIST else "distributed"
+        if routing == "distributed":
+            empty = queries.isEmpty() if qrows is None else not qrows
+            if empty:
+                return None, []
+            routing_df = self.route_distributed(
+                queries, nprobe, query_id, query_vec
+            ).localCheckpoint()
+            probed = sorted(
+                r.cluster_id
+                for r in routing_df.select("cluster_id").distinct().collect()
+            )
+            return routing_df, probed
+        if qrows is None:
+            qrows = queries.select(query_id, query_vec).collect()
+        if not qrows:
+            return None, []
+        pairs, probed = self.route(qrows, nprobe, query_id, query_vec)
+        return self.spark.createDataFrame(pairs, [query_id, "cluster_id"]), probed
+
+    def probe_batch(
+        self,
+        queries: DataFrame,
+        nprobe: int,
+        table: DataFrame,
+        num_query_blocks: int | None = None,
+        query_id: str = "query_id",
+        query_vec: str = "query_vec",
+    ) -> tuple[DataFrame, DataFrame, dict | None]:
+        """Batch probe step of every IVF-family ``search_batch`` and
+        ``range_search_batch``, with NOTHING query-scale on the driver.
+        ``table`` is what the caller scans (the index data, or codes
+        partitioned by the same cluster_id). Returns ``(probes, pruned
+        table, salt counts)``:
+
+        - ``probes``: the nq·nprobe (query_id, cluster_id) pairs of the
+          blocked exact top-k over the CENTROID table — no query
+          broadcast, no centroid collect, so scale-safe in nq AND nlist
+          at once (the centroid count is free metadata, so the router's
+          sizing count is skipped). A LAZY localCheckpoint: it feeds the
+          query join, the prune decision and (on a stats miss) the
+          salting count, which would otherwise each re-run the top-k.
+        - the table pruned to the probed clusters
+          (:meth:`_apply_cluster_prune`), gated by coverage
+          (:meth:`batch_prune_plan`): when the probed clusters cover
+          ~all lists the prune filters nothing and is skipped.
+        - per-cluster row counts from index METADATA, restricted to the
+          probed set — the salting decision without a per-call count
+          job (a codes table has the data's per-cluster rows).
+
+        Plan CONSTRUCTION may run bounded jobs here: the probed-id
+        collect behind the prune (≤ nlist ids; skipped when nprobe alone
+        covers ≥80% of the lists) and, once per index, the cluster-stats
+        count. Repeated calls on an unchanged index re-run only the
+        probed collect."""
+        from deployment_spark.operators.similarity import (
+            DEFAULT_BLOCK_ROWS,
+            topk_similarity_join_blocked,
+        )
+
+        probes = (
+            topk_similarity_join_blocked(
+                self.centroids_df(),
+                queries,
+                k=int(nprobe),
+                corpus_id="cluster_id",
+                corpus_vec="centroid",
+                query_id=query_id,
+                query_vec=query_vec,
+                num_query_blocks=num_query_blocks,
+                num_corpus_blocks=max(1, -(-self.nlist() // DEFAULT_BLOCK_ROWS)),
+            )
+            .select(query_id, "cluster_id")
+            .localCheckpoint(eager=False)
+        )
+        probed, counts = self.batch_prune_plan(probes, int(nprobe))
+        return probes, self._apply_cluster_prune(table, probed), counts
+
+    def _probed_scores(self, queries, nprobe, routing, query_id, query_vec, vec_col):
+        """The scored probed candidates of :meth:`search` and
+        :meth:`range_search`: scan(data, cluster_id ∈ probed)
+        [partition-pruned] ⋈_broadcast (query_id, cluster_id) routing
+        frame → exact cosine ``_sim``. None for an empty query batch."""
+        routing_df, probed = self.probe(queries, nprobe, routing, query_id, query_vec)
+        if routing_df is None:
+            return None
+        q = F.broadcast(
+            queries.withColumnRenamed(query_vec, "_qvec").join(routing_df, query_id)
+        )
+        # isin(probed) prunes non-probed cluster_id partitions at the scan
+        candidates = self.data().filter(F.col("cluster_id").isin(probed))
+        return candidates.join(q, "cluster_id").withColumn(
+            "_sim", cosine_similarity(vec_col, "_qvec")
+        )
 
     # -- search (V5 nprobe pruning + J1 top-k) --------------------------------
 
@@ -690,33 +828,12 @@ class IVFIndex:
         per-query window top-k. Output: (query_id, vec_id, rank,
         similarity).
 
-        ``routing``: 'driver' collects the centroid set and prunes the
-        scan with a literal isin (the FAISS-in-RAM contract — right for
-        the reference's nlist ≤ 100); 'distributed' routes through
-        :meth:`route_distributed` with NO driver-side centroid collect —
-        the only thing that ever reaches the driver is the PROBED id set
-        (≤ nq × nprobe ints, bounded by the query-batch contract, not by
-        nlist), which becomes the same literal partition-pruning filter.
-        This path stays correct (and driver-safe) at nlist ≈ √n =
-        10⁴-10⁵ on a 100 TB corpus. 'auto' picks driver at or below
-        AUTO_DISTRIBUTED_NLIST (8,192 — the measured crossover, see the
-        constant's note), distributed above. 'batch' dispatches to
+        ``routing`` 'auto' | 'driver' | 'distributed' picks the probe
+        route (see :meth:`probe`). 'batch' dispatches to
         :meth:`search_batch` — the corpus-scale-QUERY-set path where
         nothing query-scale reaches the driver (both other routings
         collect the query batch, which is their contract)."""
-        if routing not in ("auto", "driver", "distributed", "batch"):
-            # fail loudly: a typo'd routing must not silently fall
-            # through to the driver collect a batch caller is avoiding
-            raise ValueError(
-                f"unknown routing {routing!r}: "
-                "expected auto | driver | distributed | batch"
-            )
-        if routing == "auto":
-            routing = (
-                "driver"
-                if self.nlist() <= AUTO_DISTRIBUTED_NLIST
-                else "distributed"
-            )
+        check_routing(routing, ("auto", "driver", "distributed", "batch"))
         if routing == "batch":
             # explicit corpus-scale-queries dispatch (r8): auto stays a
             # function of nlist only — sizing by nq would force a count
@@ -725,51 +842,11 @@ class IVFIndex:
             return self.search_batch(
                 queries, k, nprobe, query_id, query_vec, id_col, vec_col
             )
-        if routing == "distributed":
-            if queries.isEmpty():
-                return self.search_empty(query_id, id_col)
-            # materialize the k-scale routing table once: it feeds both
-            # the probed-id collect and the search join
-            routing_df = self.route_distributed(
-                queries, nprobe, query_id, query_vec
-            ).localCheckpoint()
-            probed = [
-                r.cluster_id
-                for r in routing_df.select("cluster_id").distinct().collect()
-            ]
-            q = F.broadcast(
-                queries.withColumnRenamed(query_vec, "_qvec").join(
-                    routing_df, query_id
-                )
-            )
-            scored = (
-                self.data()
-                .filter(F.col("cluster_id").isin(probed))
-                .join(q, "cluster_id")
-                .withColumn("_sim", cosine_similarity(vec_col, "_qvec"))
-            )
-            w = Window.partitionBy(query_id).orderBy(F.desc("_sim"), F.asc(id_col))
-            return (
-                scored.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select(query_id, id_col, "rank", F.col("_sim").alias("similarity"))
-            )
-        qrows = queries.select(query_id, query_vec).collect()
-        if not qrows:
+        scored = self._probed_scores(
+            queries, nprobe, routing, query_id, query_vec, vec_col
+        )
+        if scored is None:
             return self.search_empty(query_id, id_col)
-        # centroid routing is driver-side like FAISS's quantizer (tiny)
-        routing_pairs, probed = self.route(qrows, nprobe, query_id, query_vec)
-        routing_df = self.spark.createDataFrame(routing_pairs, [query_id, "cluster_id"])
-
-        q = F.broadcast(
-            queries.withColumnRenamed(query_vec, "_qvec")
-            .join(routing_df, query_id)
-        )
-        # isin(probed) prunes non-probed cluster_id partitions at the scan
-        candidates = self.data().filter(F.col("cluster_id").isin(probed))
-        scored = candidates.join(q, "cluster_id").withColumn(
-            "_sim", cosine_similarity(vec_col, "_qvec")
-        )
         w = Window.partitionBy(query_id).orderBy(F.desc("_sim"), F.asc(id_col))
         return (
             scored.withColumn("rank", F.row_number().over(w))
@@ -943,44 +1020,13 @@ class IVFIndex:
         the tie-aware rank window caps each query, matching
         radius_search's contract. Output
         (query_id, vec_id, similarity[, rank])."""
-        if routing not in ("auto", "driver", "distributed"):
-            raise ValueError(
-                f"unknown routing {routing!r}: expected auto | driver | distributed"
-            )
-        if routing == "auto":
-            routing = (
-                "driver"
-                if self.nlist() <= AUTO_DISTRIBUTED_NLIST
-                else "distributed"
-            )
-        if queries.isEmpty():
-            empty = self.search_empty(query_id, id_col)
-            cols = [query_id, id_col, "similarity"]
-            if limit_per_query is not None:
-                cols = [query_id, id_col, "rank", "similarity"]
-            return empty.select(*cols)
-        if routing == "distributed":
-            routing_df = self.route_distributed(
-                queries, nprobe, query_id, query_vec
-            ).localCheckpoint()
-            probed = [
-                r.cluster_id
-                for r in routing_df.select("cluster_id").distinct().collect()
-            ]
-        else:
-            qrows = queries.select(query_id, query_vec).collect()
-            pairs, probed = self.route(qrows, nprobe, query_id, query_vec)
-            routing_df = self.spark.createDataFrame(pairs, [query_id, "cluster_id"])
-        q = F.broadcast(
-            queries.withColumnRenamed(query_vec, "_qvec").join(routing_df, query_id)
+        check_routing(routing, ("auto", "driver", "distributed"))
+        scored = self._probed_scores(
+            queries, nprobe, routing, query_id, query_vec, vec_col
         )
-        hits = (
-            self.data()
-            .filter(F.col("cluster_id").isin(probed))
-            .join(q, "cluster_id")
-            .withColumn("_sim", cosine_similarity(vec_col, "_qvec"))
-            .filter(F.col("_sim") >= float(radius))
-        )
+        if scored is None:
+            return self._range_empty(query_id, id_col, limit_per_query)
+        hits = scored.filter(F.col("_sim") >= float(radius))
         if limit_per_query is None:
             return hits.select(
                 query_id, id_col, F.col("_sim").alias("similarity")
@@ -1019,24 +1065,16 @@ class IVFIndex:
         ``max_cluster_rows_per_task`` exactly as in ``search_batch``
         (every (query, salt) emits its local hits; radius membership is
         per-row, so salting cannot change the hit set — only the local
-        cap needs the global window to re-merge). Like ``search_batch``,
-        plan CONSTRUCTION may run bounded jobs (probed-set collect,
-        once-per-index stats count) — see the note there (r9 ADVICE)."""
+        cap needs the global window to re-merge). Plan CONSTRUCTION may
+        run bounded jobs — see :meth:`probe_batch`."""
         from deployment_spark.operators.similarity import (
-            DEFAULT_BLOCK_ROWS,
             _cid_sort_kind,
             _grouped_pair_hits,
-            _maybe_salt_hot_groups,
-            topk_similarity_join_blocked,
         )
 
         lim = None if limit_per_query is None else int(limit_per_query)
         if queries.isEmpty():
-            empty = self.search_empty(query_id, id_col)
-            cols = [query_id, id_col, "similarity"]
-            if lim is not None:
-                cols = [query_id, id_col, "rank", "similarity"]
-            return empty.select(*cols)
+            return self._range_empty(query_id, id_col, lim)
         data = self.data()
         qid_type = queries.schema[query_id].dataType
         cid_type = data.schema[id_col].dataType
@@ -1045,51 +1083,16 @@ class IVFIndex:
         else:
             cid_kind = "str"  # no limit ⇒ no ranking ⇒ id order never applies
 
-        # same consumer-sharing lazy checkpoint + coverage-gated
-        # unprobed-cluster pruning + metadata-fed salting + null
-        # exclusion + construction-time eagerness as search_batch —
-        # see there for the full rationale
-        probes = (
-            topk_similarity_join_blocked(
-                self.centroids_df(),
-                queries,
-                k=int(nprobe),
-                corpus_id="cluster_id",
-                corpus_vec="centroid",
-                query_id=query_id,
-                query_vec=query_vec,
-                num_query_blocks=num_query_blocks,
-                # centroid-table size is free index metadata — skip the
-                # blocked router's corpus-side sizing count (r10)
-                num_corpus_blocks=max(1, -(-self.nlist() // DEFAULT_BLOCK_ROWS)),
-            )
-            .select(query_id, "cluster_id")
-            .localCheckpoint(eager=False)
+        probes, data, salt_counts = self.probe_batch(
+            queries, nprobe, data, num_query_blocks, query_id, query_vec
         )
-        probed, salt_counts = self.batch_prune_plan(probes, int(nprobe))
-        data = self._apply_cluster_prune(data, probed)
 
-        q = queries.join(probes, query_id).select(
-            F.col(query_id).cast("string").alias("_qid"),
-            F.lit(None).cast("string").alias("_cid"),
-            F.col(query_vec).cast("array<double>").alias("_vec"),
-            F.col("cluster_id").alias("_g"),
-        )
-        c = data.filter(F.col(vec_col).isNotNull()).select(
-            F.lit(None).cast("string").alias("_qid"),
-            F.col(id_col).cast("string").alias("_cid"),
-            F.col(vec_col).cast("array<double>").alias("_vec"),
-            F.col("cluster_id").alias("_g"),
-        )
-        q, c, group_cols = _maybe_salt_hot_groups(
-            q, c, data.select("cluster_id"), max_cluster_rows_per_task,
-            counts=salt_counts,
+        pairs, group_cols = self._batch_pairs(
+            queries, probes, data, query_id, query_vec, id_col, vec_col,
+            max_cluster_rows_per_task, salt_counts,
         )
         hits = (
-            _grouped_pair_hits(
-                q.unionByName(c.select(*q.columns)), group_cols,
-                float(radius), lim, cid_kind,
-            )
+            _grouped_pair_hits(pairs, group_cols, float(radius), lim, cid_kind)
             .withColumn("_qid", F.col("_qid").cast(qid_type))
             .withColumn("_cid", F.col("_cid").cast(cid_type))
         )
@@ -1130,11 +1133,11 @@ class IVFIndex:
         contract for interactive batches and impossible for a 10⁶-query
         job. Here:
 
-        1. ROUTING is the blocked exact top-k over the CENTROID table
-           (``similarity.topk_similarity_join_blocked`` with k=nprobe):
-           no query broadcast, no centroid collect — scale-safe in nq
-           AND nlist simultaneously (route_distributed broadcasts the
-           query matrix; the driver router collects centroids).
+        1. ROUTING and PRUNING are :meth:`probe_batch`: the blocked
+           exact top-k over the CENTROID table, scale-safe in nq AND
+           nlist simultaneously (route_distributed broadcasts the query
+           matrix; the driver router collects centroids), then the
+           coverage-gated prune of unprobed clusters.
         2. SCORING groups the probed (query, cluster) pairs WITH the
            cluster's corpus rows by cluster_id — the same union-frame
            task as the hash-blocked exact path, keyed by the index's
@@ -1157,22 +1160,11 @@ class IVFIndex:
         counts from index metadata (free); local-global top-k stays
         exact because every (query, salt) emits its tie-aware local
         top-k and the global window merges. Cosine only, like the
-        index itself.
-
-        NOTE (r9 ADVICE): unlike a plain DataFrame transformation,
-        CONSTRUCTING this plan may run bounded Spark jobs — the probed
-        cluster-id collect behind the coverage-gated prune (≤ nlist
-        ids; skipped when nprobe itself covers ≥80% of the lists) and,
-        once per index, the cluster-stats count backing the salting
-        decision. Callers composing plans lazily or looping over
-        searches should expect that; repeated calls on an unchanged
-        index re-run only the probed collect."""
+        index itself. Plan CONSTRUCTION may run bounded jobs — see
+        :meth:`probe_batch`."""
         from deployment_spark.operators.similarity import (
-            DEFAULT_BLOCK_ROWS,
             _cid_sort_kind,
             _grouped_pair_topk,
-            _maybe_salt_hot_groups,
-            topk_similarity_join_blocked,
         )
 
         if queries.isEmpty():
@@ -1183,37 +1175,40 @@ class IVFIndex:
         cid_kind = _cid_sort_kind(cid_type, "ivf batch search")
         kk = int(k)
 
-        # localCheckpoint (lazy): the routing table feeds the query join,
-        # the prune decision AND (on a stats miss) the salting count —
-        # without it the centroid blocked top-k would re-run per
-        # consumer. Rows are nq·nprobe (qid, cluster_id) pairs — never
-        # corpus-scale.
-        probes = (
-            topk_similarity_join_blocked(
-                self.centroids_df(),
-                queries,
-                k=int(nprobe),
-                corpus_id="cluster_id",
-                corpus_vec="centroid",
-                query_id=query_id,
-                query_vec=query_vec,
-                num_query_blocks=num_query_blocks,
-                # centroid-table size is free index metadata — skip the
-                # blocked router's corpus-side sizing count (r10)
-                num_corpus_blocks=max(1, -(-self.nlist() // DEFAULT_BLOCK_ROWS)),
-            )
-            .select(query_id, "cluster_id")
-            .localCheckpoint(eager=False)
+        probes, data, salt_counts = self.probe_batch(
+            queries, nprobe, data, num_query_blocks, query_id, query_vec
         )
-        # prune unprobed clusters BEFORE the shuffle (r8 VERDICT #2, r10
-        # coverage gate): clusters no query touches never leave the scan
-        # (static partition filter / bounded semi-join), and when probed
-        # clusters cover ~all lists — where the prune filters nothing —
-        # its fixed overhead is skipped entirely (VERDICT r9 #1). The
-        # salting decision reads per-cluster counts from index METADATA
-        # (VERDICT r9 #2) instead of a per-call count job.
-        probed, salt_counts = self.batch_prune_plan(probes, int(nprobe))
-        data = self._apply_cluster_prune(data, probed)
+
+        pairs, group_cols = self._batch_pairs(
+            queries, probes, data, query_id, query_vec, id_col, vec_col,
+            max_cluster_rows_per_task, salt_counts,
+        )
+        candidates = (
+            _grouped_pair_topk(pairs, group_cols, kk, "cosine", cid_kind)
+            .withColumn("_qid", F.col("_qid").cast(qid_type))
+            .withColumn("_cid", F.col("_cid").cast(cid_type))
+        )
+        w = Window.partitionBy("_qid").orderBy(F.desc("_sim"), F.asc("_cid"))
+        return (
+            candidates.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= kk)
+            .select(
+                F.col("_qid").alias(query_id),
+                F.col("_cid").alias(id_col),
+                "rank",
+                F.col("_sim").alias("similarity"),
+            )
+        )
+
+    def _batch_pairs(
+        self, queries, probes, data, query_id, query_vec, id_col, vec_col,
+        max_cluster_rows_per_task, salt_counts,
+    ):
+        """The union frame :meth:`search_batch` and
+        :meth:`range_search_batch` group by cluster: the probed (query,
+        cluster) pairs next to the probed clusters' corpus rows, hot
+        clusters salted. Returns ``(frame, group_cols)``."""
+        from deployment_spark.operators.similarity import _maybe_salt_hot_groups
 
         q = queries.join(probes, query_id).select(
             F.col(query_id).cast("string").alias("_qid"),
@@ -1240,25 +1235,7 @@ class IVFIndex:
             q, c, data.select("cluster_id"), max_cluster_rows_per_task,
             counts=salt_counts,
         )
-        candidates = (
-            _grouped_pair_topk(
-                q.unionByName(c.select(*q.columns)), group_cols, kk,
-                "cosine", cid_kind
-            )
-            .withColumn("_qid", F.col("_qid").cast(qid_type))
-            .withColumn("_cid", F.col("_cid").cast(cid_type))
-        )
-        w = Window.partitionBy("_qid").orderBy(F.desc("_sim"), F.asc("_cid"))
-        return (
-            candidates.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= kk)
-            .select(
-                F.col("_qid").alias(query_id),
-                F.col("_cid").alias(id_col),
-                "rank",
-                F.col("_sim").alias("similarity"),
-            )
-        )
+        return q.unionByName(c.select(*q.columns)), group_cols
 
     def search_empty(self, query_id: str, id_col: str) -> DataFrame:
         from pyspark.sql.types import DoubleType, LongType, StructField, StructType
@@ -1274,3 +1251,11 @@ class IVFIndex:
                 ]
             ),
         )
+
+    def _range_empty(self, query_id: str, id_col: str, limit) -> DataFrame:
+        """Empty-input result of every range search: (query_id, id_col,
+        similarity), plus rank when a per-query limit is set."""
+        cols = [query_id, id_col, "similarity"]
+        if limit is not None:
+            cols = [query_id, id_col, "rank", "similarity"]
+        return self.search_empty(query_id, id_col).select(*cols)

@@ -33,7 +33,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from deployment_spark.operators.ivf import IVFIndex
+from deployment_spark.operators.ivf import IVFIndex, check_routing
 from deployment_spark.operators.pq import PQCodec
 from deployment_spark.operators.similarity import (
     DEFAULT_MAX_CLUSTER_ROWS_PER_TASK as DEFAULT_SALT_BOUND,
@@ -106,28 +106,21 @@ class IVFPQIndex:
         similarity is exact cosine when re-ranking, else the negated ADC
         distance (comparable ordering, documented approximation).
 
-        Pruning is PER QUERY: a (query_id, cluster_id) routing table
-        (shared helper with ``IVFIndex.search``) joins the codes scan,
-        so each query scores only codes in ITS nprobe lists — results
-        never depend on which other queries share the batch — while the
-        ``isin`` on the union still prunes partitions at the scan.
+        Pruning is PER QUERY: the (query_id, cluster_id) routing frame
+        of ``IVFIndex.probe`` joins the codes scan, so each query scores
+        only codes in ITS nprobe lists — results never depend on which
+        other queries share the batch — while the ``isin`` on the union
+        still prunes partitions at the scan.
 
         ``routing='batch'`` dispatches to :meth:`search_batch` — the
         corpus-scale-QUERY-set path where nothing query-scale reaches
         the driver (the other routings collect the query batch, which
-        is their LUT contract) — mirroring ``IVFIndex.search``."""
+        is their LUT contract), as ``IVFIndex.search`` does."""
         import pandas as pd
 
-        from pyspark.sql import Window
         from pyspark.sql.types import DoubleType, StructField, StructType
 
-        if routing not in ("driver", "distributed", "batch"):
-            # fail loudly: a typo'd routing must not silently fall
-            # through to the driver collect a batch caller is avoiding
-            raise ValueError(
-                f"unknown routing {routing!r}: "
-                "expected driver | distributed | batch"
-            )
+        check_routing(routing, ("driver", "distributed", "batch"))
         if routing == "batch":
             # explicit corpus-scale-queries dispatch (r8): no count job,
             # no query collect on this path — batch callers know they
@@ -137,23 +130,11 @@ class IVFPQIndex:
                 id_col, vec_col,
             )
         qrows = queries.select(query_id, query_vec).collect()  # nq-scale
-        if not qrows:
+        routing_df, probed = self.ivf.probe(
+            queries, nprobe, routing, query_id, query_vec, qrows=qrows
+        )
+        if routing_df is None:
             return self.ivf.search_empty(query_id, id_col)
-        # 'distributed' routes through IVFIndex.route_distributed — no
-        # centroid collect at nlist = 10^4-10^5; only the nq×nprobe
-        # probed ids reach the driver (the queries themselves are
-        # already nq-scale driver state by the LUT/codec contract)
-        if routing == "distributed":
-            routing_df = self.ivf.route_distributed(
-                queries, nprobe, query_id, query_vec
-            ).localCheckpoint()
-            probed = [
-                r.cluster_id
-                for r in routing_df.select("cluster_id").distinct().collect()
-            ]
-        else:
-            pairs, probed = self.ivf.route(qrows, nprobe, query_id, query_vec)
-            routing_df = self.spark.createDataFrame(pairs, [query_id, "cluster_id"])
 
         codec = self.codec()
         m, dsub = codec.m, codec.dsub
@@ -268,11 +249,7 @@ class IVFPQIndex:
 
         lim = None if limit_per_query is None else int(limit_per_query)
         if queries.isEmpty():
-            empty = self.ivf.search_empty(query_id, id_col)
-            cols = [query_id, id_col, "similarity"]
-            if lim is not None:
-                cols = [query_id, id_col, "rank", "similarity"]
-            return empty.select(*cols)
+            return self.ivf._range_empty(query_id, id_col, lim)
         codes = self.codes()
         if "resid" not in codes.columns:
             raise ValueError(
@@ -283,8 +260,9 @@ class IVFPQIndex:
             )
         qn = queries.select(query_id, l2_normalize(query_vec).alias(query_vec))
         qrows = qn.collect()  # nq-scale (interactive contract)
-        pairs, probed = self.ivf.route(qrows, nprobe, query_id, query_vec)
-        routing_df = self.spark.createDataFrame(pairs, [query_id, "cluster_id"])
+        routing_df, probed = self.ivf.probe(
+            qn, nprobe, "driver", query_id, query_vec, qrows=qrows
+        )
         codec = self.codec()
         m, dsub = codec.m, codec.dsub
         books = codec.codebooks
@@ -450,8 +428,8 @@ class IVFPQIndex:
         three stages as ``IVFIndex.search_batch``, over the COMPRESSED
         codes:
 
-        1. ROUTING: blocked exact top-k over the centroid table
-           (k=nprobe) — scale-safe in nq and nlist simultaneously;
+        1. ROUTING + PRUNING: ``IVFIndex.probe_batch`` over the codes
+           table — scale-safe in nq and nlist simultaneously;
         2. ADC: probed (query, cluster) pairs group WITH the cluster's
            m-byte code rows by cluster_id; each task rebuilds its
            queries' LUTs from the broadcast codebooks and gathers —
@@ -469,9 +447,8 @@ class IVFPQIndex:
         exact). Output schema identical to :meth:`search`."""
         from deployment_spark.operators.pq import _grouped_adc_topk
         from deployment_spark.operators.similarity import (
-            DEFAULT_BLOCK_ROWS,
             _cid_sort_kind,
-            topk_similarity_join_blocked,
+            _maybe_salt_hot_groups,
         )
 
         if queries.isEmpty():
@@ -483,33 +460,11 @@ class IVFPQIndex:
         cid_kind = _cid_sort_kind(cid_type, "ivfpq batch search")
         take = int(k) if shortlist is None else max(int(shortlist), int(k))
 
-        # lazy checkpoint + coverage-gated unprobed-cluster pruning (r10;
-        # counts are the IVF layout's metadata — codes carry the SAME
-        # per-cluster row counts, every row encodes) + null-code
-        # exclusion, same rationale as IVFIndex.search_batch: clusters
-        # no query probes must not ride the code shuffle, and a null
-        # code would crash the b''.join inside _grouped_adc_topk (r8
-        # ADVICE). Like there, plan CONSTRUCTION may run bounded jobs
-        # (probed collect; once-per-index stats count) — r9 ADVICE.
-        probes = (
-            topk_similarity_join_blocked(
-                self.ivf.centroids_df(),
-                queries,
-                k=int(nprobe),
-                corpus_id="cluster_id",
-                corpus_vec="centroid",
-                query_id=query_id,
-                query_vec=query_vec,
-                num_query_blocks=num_query_blocks,
-                # centroid-table size is free index metadata — skip the
-                # blocked router's corpus-side sizing count (r10)
-                num_corpus_blocks=max(1, -(-self.ivf.nlist() // DEFAULT_BLOCK_ROWS)),
-            )
-            .select(query_id, "cluster_id")
-            .localCheckpoint(eager=False)
+        # null codes are excluded: one would crash the b''.join inside
+        # _grouped_adc_topk (r8 ADVICE)
+        probes, codes, salt_counts = self.ivf.probe_batch(
+            queries, nprobe, codes, num_query_blocks, query_id, query_vec
         )
-        probed, salt_counts = self.ivf.batch_prune_plan(probes, int(nprobe))
-        codes = self.ivf._apply_cluster_prune(codes, probed)
 
         q = queries.join(probes, query_id).select(
             F.col(query_id).cast("string").alias("_qid"),
@@ -525,8 +480,6 @@ class IVFPQIndex:
             F.col("code").alias("_code"),
             F.col("cluster_id").alias("_g"),
         )
-        from deployment_spark.operators.similarity import _maybe_salt_hot_groups
-
         q, c, group_cols = _maybe_salt_hot_groups(
             q, c, codes.select("cluster_id"), max_cluster_rows_per_task,
             counts=salt_counts,

@@ -39,7 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from deployment_spark.operators.ivf import IVFIndex
+from deployment_spark.operators.ivf import IVFIndex, check_routing
 from deployment_spark.operators.similarity import (
     DEFAULT_MAX_CLUSTER_ROWS_PER_TASK as DEFAULT_SALT_BOUND,
 )
@@ -107,22 +107,16 @@ class IVFSQIndex:
         exact cosine when re-ranking, else the ADC dot product (queries
         and the encoded corpus are expected normalized).
 
-        Pruning is PER QUERY (shared routing helper with IVFIndex): each
-        query scores only codes in ITS nprobe lists, while the ``isin``
-        on the union still prunes partitions at the scan.
+        Pruning is PER QUERY (the routing frame of ``IVFIndex.probe``):
+        each query scores only codes in ITS nprobe lists, while the
+        ``isin`` on the union still prunes partitions at the scan.
 
         ``routing='batch'`` dispatches to :meth:`search_batch` — the
         corpus-scale-QUERY-set path where nothing query-scale reaches
-        the driver — mirroring ``IVFIndex.search``."""
+        the driver — as ``IVFIndex.search`` does."""
         from deployment_spark.functions.vector import cosine_similarity, dot_product
 
-        if routing not in ("driver", "distributed", "batch"):
-            # fail loudly: a typo'd routing must not silently fall
-            # through to the driver collect a batch caller is avoiding
-            raise ValueError(
-                f"unknown routing {routing!r}: "
-                "expected driver | distributed | batch"
-            )
+        check_routing(routing, ("driver", "distributed", "batch"))
         if routing == "batch":
             # explicit corpus-scale-queries dispatch (r8): no count job,
             # no query collect on this path — batch callers know they
@@ -131,24 +125,11 @@ class IVFSQIndex:
                 queries, k, nprobe, shortlist, query_id, query_vec,
                 id_col, vec_col,
             )
-        qrows = queries.select(query_id, query_vec).collect()  # nq-scale
-        if not qrows:
+        routing_df, probed = self.ivf.probe(
+            queries, nprobe, routing, query_id, query_vec
+        )
+        if routing_df is None:
             return self.ivf.search_empty(query_id, id_col)
-        # 'distributed' routes through IVFIndex.route_distributed — no
-        # centroid collect at nlist = 10^4-10^5; only the nq×nprobe
-        # probed ids reach the driver (the queries themselves are
-        # already nq-scale driver state by the LUT/codec contract)
-        if routing == "distributed":
-            routing_df = self.ivf.route_distributed(
-                queries, nprobe, query_id, query_vec
-            ).localCheckpoint()
-            probed = [
-                r.cluster_id
-                for r in routing_df.select("cluster_id").distinct().collect()
-            ]
-        else:
-            pairs, probed = self.ivf.route(qrows, nprobe, query_id, query_vec)
-            routing_df = self.spark.createDataFrame(pairs, [query_id, "cluster_id"])
         codec = self.codec()
         take = k if shortlist is None else max(int(shortlist), k)
 
@@ -235,17 +216,14 @@ class IVFSQIndex:
         qrows_empty = queries.isEmpty()
         lim = None if limit_per_query is None else int(limit_per_query)
         if qrows_empty:
-            empty = self.ivf.search_empty(query_id, id_col)
-            cols = [query_id, id_col, "similarity"]
-            if lim is not None:
-                cols = [query_id, id_col, "rank", "similarity"]
-            return empty.select(*cols)
+            return self.ivf._range_empty(query_id, id_col, lim)
         qn = queries.select(
             query_id, l2_normalize(query_vec).alias(query_vec)
         )
         qrows = qn.collect()  # nq-scale (interactive contract)
-        pairs, probed = self.ivf.route(qrows, nprobe, query_id, query_vec)
-        routing_df = self.spark.createDataFrame(pairs, [query_id, "cluster_id"])
+        routing_df, probed = self.ivf.probe(
+            qn, nprobe, "driver", query_id, query_vec, qrows=qrows
+        )
         codec = self.codec()
 
         qv = F.broadcast(
@@ -305,8 +283,8 @@ class IVFSQIndex:
         interactive contract). Same three stages as
         ``IVFIndex.search_batch``:
 
-        1. ROUTING: blocked exact top-k over the centroid table
-           (k=nprobe) — no query broadcast, no centroid collect;
+        1. ROUTING + PRUNING: ``IVFIndex.probe_batch`` over the codes
+           table — no query broadcast, no centroid collect;
         2. ADC: probed (query, cluster) pairs group WITH the cluster's
            1 B/dim code rows by cluster_id; each task decodes its code
            block with the numpy image of ``decode_expr`` (bit-identical
@@ -322,10 +300,9 @@ class IVFSQIndex:
         and tie-breaks identical to :meth:`search` (ADC scores differ
         from the expression path only in summation-order ulps)."""
         from deployment_spark.operators.similarity import (
-            DEFAULT_BLOCK_ROWS,
             _cid_sort_kind,
             _grouped_pair_topk,
-            topk_similarity_join_blocked,
+            _maybe_salt_hot_groups,
         )
 
         if queries.isEmpty():
@@ -337,32 +314,11 @@ class IVFSQIndex:
         cid_kind = _cid_sort_kind(cid_type, "ivfsq batch search")
         take = int(k) if shortlist is None else max(int(shortlist), int(k))
 
-        # lazy checkpoint + coverage-gated unprobed-cluster pruning (r10;
-        # counts are the IVF layout's metadata — the codes table carries
-        # the same per-cluster rows) + null-code exclusion, same
-        # rationale as IVFIndex.search_batch: a null codes array would
-        # crash the np.array(...tolist()) decode inside the scoring task
-        # (r8 ADVICE). Like there, plan CONSTRUCTION may run bounded
-        # jobs (probed collect; once-per-index stats count) — r9 ADVICE.
-        probes = (
-            topk_similarity_join_blocked(
-                self.ivf.centroids_df(),
-                queries,
-                k=int(nprobe),
-                corpus_id="cluster_id",
-                corpus_vec="centroid",
-                query_id=query_id,
-                query_vec=query_vec,
-                num_query_blocks=num_query_blocks,
-                # centroid-table size is free index metadata — skip the
-                # blocked router's corpus-side sizing count (r10)
-                num_corpus_blocks=max(1, -(-self.ivf.nlist() // DEFAULT_BLOCK_ROWS)),
-            )
-            .select(query_id, "cluster_id")
-            .localCheckpoint(eager=False)
+        # null codes are excluded: a null codes array would crash the
+        # np.array(...tolist()) decode inside the scoring task (r8 ADVICE)
+        probes, codes, salt_counts = self.ivf.probe_batch(
+            queries, nprobe, codes, num_query_blocks, query_id, query_vec
         )
-        probed, salt_counts = self.ivf.batch_prune_plan(probes, int(nprobe))
-        codes = self.ivf._apply_cluster_prune(codes, probed)
 
         q = queries.join(probes, query_id).select(
             F.col(query_id).cast("string").alias("_qid"),
@@ -378,8 +334,6 @@ class IVFSQIndex:
             F.col("codes").alias("_code"),
             F.col("cluster_id").alias("_g"),
         )
-        from deployment_spark.operators.similarity import _maybe_salt_hot_groups
-
         q, c, group_cols = _maybe_salt_hot_groups(
             q, c, codes.select("cluster_id"), max_cluster_rows_per_task,
             counts=salt_counts,

@@ -66,7 +66,6 @@ over the survivors, replayed independently in SQL and numpy).
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -362,26 +361,11 @@ class TokenIVFIndex:
 
     def _probed_cells(self, queries: DataFrame, nprobe: int) -> list[int]:
         """The sorted union of cells this query batch probes — the SAME
-        routing the quantizer search runs (``IVFIndex.route`` at
-        driver-scale nlist, ``route_distributed`` above it; the two are
-        documented to produce identical probe sets, matching
-        tie-breaks), so restricting any follow-up read to these cells
-        provably covers every hit the search can return. Collect is
-        nq·nprobe-bounded ints, never data rows."""
-        from deployment_spark.operators.ivf import AUTO_DISTRIBUTED_NLIST
-
-        q = self.quantizer()
-        if q.nlist() <= AUTO_DISTRIBUTED_NLIST:
-            qrows = queries.select("query_id", "query_vec").collect()
-            _, probed = q.route(qrows, nprobe)
-            return probed
-        return sorted(
-            r.cluster_id
-            for r in q.route_distributed(queries, nprobe)
-            .select("cluster_id")
-            .distinct()
-            .collect()
-        )
+        ``IVFIndex.probe`` step the quantizer search runs, so restricting
+        any follow-up read to these cells provably covers every hit the
+        search can return. Collect is nq·nprobe-bounded ints, never data
+        rows."""
+        return self.quantizer().probe(queries, nprobe)[1]
 
     def search_tokens(
         self, queries: DataFrame, k: int, nprobe: int = 8, with_doc: bool = False

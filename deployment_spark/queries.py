@@ -121,24 +121,6 @@ def q_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shape(res, "bcast").unionByName(shape(res_blocked, "blocked"))
 
 
-# shared by ivf_topk (full-probe IVF ≡ exact, same 10-query panel)
-SQL_TOPK_COSINE = """
-WITH q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-  FROM embeddings WHERE vec_id < 10
-), s AS (
-  SELECT q.query_id, c.vec_id,
-         list_cosine_similarity(c.embedding::DOUBLE[], q.qv) AS sim
-  FROM embeddings c CROSS JOIN q
-), r AS (
-  SELECT query_id, vec_id, sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rank
-  FROM s
-)
-SELECT query_id, vec_id, rank, round(sim, 4) AS similarity
-FROM r WHERE rank <= 5
-"""
-
 # ivf_topk's two-arm oracle (r9): full probe makes BOTH the interactive
 # and the batch index routes exact, so one brute-force ranking CTE
 # serves both — the interactive arm reads its 10-query slice of the
@@ -675,16 +657,6 @@ def q_events_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_EVENTS_LAG_DELTA = """
-SELECT user_id, event_id,
-       epoch_us(ts) - epoch_us(lag(ts) OVER w) AS gap_us,
-       round(value - lag(value) OVER w, 4) AS value_delta
-FROM events
-WHERE user_id < 20
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-"""
-
-
 def q_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6/S5 — equality point lookup (Milvus/stream1.py:331,340); the
     predicate reaches the parquet scan (PushedFilters)."""
@@ -692,46 +664,6 @@ def q_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.filter(F.col("o_orderkey") == 42).select(
         "o_orderkey", "o_custkey", "o_orderstatus", F.round("o_totalprice", 2).alias("o_totalprice")
     )
-
-
-SQL_POINT_LOOKUP = """
-SELECT o_orderkey, o_custkey, o_orderstatus, round(o_totalprice, 2) AS o_totalprice
-FROM orders WHERE o_orderkey = 42
-"""
-
-
-def q_filter_inlist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P8 — IN-list predicate (Milvus/stream1.py:313)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.filter(F.col("event_type").isin("purchase", "signup"))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.round(F.sum("value"), 2).alias("total_value"))
-    )
-
-
-SQL_FILTER_INLIST = """
-SELECT event_type, count(*) AS cnt, round(sum(value), 2) AS total_value
-FROM events WHERE event_type IN ('purchase', 'signup')
-GROUP BY event_type
-"""
-
-
-def q_filter_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P7 — range predicate as expression string (Milvus/stream1.py:299)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.filter("value >= 50 AND value < 100")
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.round(F.avg("value"), 4).alias("avg_value"))
-    )
-
-
-SQL_FILTER_RANGE = """
-SELECT event_type, count(*) AS cnt, round(avg(value), 4) AS avg_value
-FROM events WHERE value >= 50 AND value < 100
-GROUP BY event_type
-"""
 
 
 def q_filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1652,33 +1584,6 @@ SQL_TEXT_FUNCTIONS = (
 )
 
 
-def q_dedup_keepfirst(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P4 — drop_duplicates(keep='first') with a defined order
-    (Milvus/stream1.py:215): first line of each order by l_linenumber."""
-    li = _t(spark, sf_dir, "lineitem")
-    # (l_orderkey, l_linenumber) is not unique in this synthetic data, so
-    # "first" is defined over a full deterministic ordering.
-    w = Window.partitionBy("l_orderkey").orderBy(
-        F.asc("l_linenumber"), F.asc("l_partkey"), F.asc("l_suppkey"), F.asc("l_quantity")
-    )
-    return (
-        li.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("l_orderkey", "l_linenumber", "l_partkey", F.round("l_quantity", 2).alias("l_quantity"))
-    )
-
-
-SQL_DEDUP_KEEPFIRST = """
-SELECT l_orderkey, l_linenumber, l_partkey, round(l_quantity, 2) AS l_quantity
-FROM (
-  SELECT l_orderkey, l_linenumber, l_partkey, l_quantity,
-         row_number() OVER (PARTITION BY l_orderkey
-                            ORDER BY l_linenumber, l_partkey, l_suppkey, l_quantity) AS rn
-  FROM lineitem
-) WHERE rn = 1
-"""
-
-
 def q_rank_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3 — rank within group: top-3 orders per customer by totalprice
     (the window shape behind per-query top-k ranking)."""
@@ -2357,26 +2262,6 @@ FROM (
   FROM b
 )
 """
-
-
-def q_doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M8 text analysis — n-gram/stopword-heuristic language ID with a
-    fixed priority tie-break."""
-    d = _t(spark, sf_dir, "documents")
-    en = F.regexp_count(F.col("text"), F.lit(r"\b(the|and|of|to)\b")).cast("long")
-    es = F.regexp_count(F.col("text"), F.lit(r"\b(el|la|de|que)\b")).cast("long")
-    de = F.regexp_count(F.col("text"), F.lit(r"\b(der|die|und|das)\b")).cast("long")
-    fr = F.regexp_count(F.col("text"), F.lit(r"\b(le|la|et|les)\b")).cast("long")
-    best = F.greatest(en, es, de, fr)
-    pred = (
-        F.when(best == 0, "unknown")
-        .when(en == best, "en")
-        .when(es == best, "es")
-        .when(de == best, "de")
-        .otherwise("fr")
-    )
-    return d.select("doc_id", en.alias("en_hits"), es.alias("es_hits"),
-                    de.alias("de_hits"), fr.alias("fr_hits"), pred.alias("predicted_lang"))
 
 
 SQL_DOC_LANG_ID = """
@@ -3069,25 +2954,6 @@ def q_doc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_DOC_NORMALIZE = """
-WITH alld AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 200000 AS doc_id, upper(text) || '  !!  ' AS text
-  FROM documents WHERE doc_id < 40
-), norm AS (
-  SELECT doc_id,
-         md5(trim(regexp_replace(
-               regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g'),
-               '\\s+', ' ', 'g'))) AS norm_hash
-  FROM alld
-)
-SELECT doc_id, norm_hash,
-       row_number() OVER (PARTITION BY norm_hash ORDER BY doc_id) = 1 AS kept
-FROM norm
-"""
-
-
 def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M8 chunking — sliding-window token chunks (window 32, stride 24,
     8-token overlap), the RAG/context-window splitter. Value-checked per
@@ -3544,31 +3410,6 @@ FROM g GROUP BY 1, 2
 """
 
 
-def q_doc_scripts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M8 script detection — per-script character counts + dominant
-    script. Docs 0-29 get planted non-Latin suffixes (Cyrillic / CJK /
-    Greek by doc_id % 3, same construction in the oracle) so the
-    detector has real multi-script input to classify."""
-    from deployment_spark.operators.textstats import add_script_detection
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    suffix = (
-        F.when(F.col("doc_id") % 3 == 0, F.lit(" привет мир как дела сегодня"))
-        .when(F.col("doc_id") % 3 == 1, F.lit(" 你好世界今天怎么样很好谢谢"))
-        .otherwise(F.lit(" γειά σου κόσμε τι κάνεις"))
-    )
-    planted = d.withColumn(
-        "text",
-        F.when(F.col("doc_id") < 30, F.concat(F.col("text"), suffix)).otherwise(
-            F.col("text")
-        ),
-    )
-    return add_script_detection(planted).select(
-        "doc_id", "n_latin", "n_cyrillic", "n_greek", "n_cjk", "n_arabic",
-        "dominant_script",
-    )
-
-
 SQL_DOC_SCRIPTS = """
 WITH alld AS (
   SELECT doc_id,
@@ -3736,23 +3577,6 @@ def q_stage_ordered_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.withColumn("stage_rank", F.row_number().over(w).cast("long")).select(
         "stage_rank", "event_type", "cnt", "avg_value"
     )
-
-
-SQL_STAGE_ORDERED_METRICS = """
-WITH agg AS (
-  SELECT event_type, count(*) AS cnt, round(avg(value), 4) AS avg_value
-  FROM events GROUP BY event_type
-)
-SELECT row_number() OVER (
-         ORDER BY CASE event_type
-                    WHEN 'signup' THEN 1
-                    WHEN 'view' THEN 2
-                    WHEN 'purchase' THEN 3
-                    ELSE 4 END,
-                  event_type) AS stage_rank,
-       event_type, cnt, avg_value
-FROM agg
-"""
 
 
 def q_doc_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6121,83 +5945,6 @@ hit AS (
 SELECT round(q, 2) AS q,
        round(0.0 + (hit.bin + (q * n - (cum - cnt)) / greatest(cnt, 1)) * 2.5, 4) AS value
 FROM hit JOIN cum ON hit.bin = cum.bin
-"""
-
-
-def q_profile_sketch_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-form profiling gated against the exact form
-    (operators/profiling.py:35; driver-gated r4, VERDICT r3 #1). The
-    exact columns (count_distinct, interpolated percentile) are
-    oracle-replayed bit-for-bit; the scale-path sketches
-    (approx_count_distinct HLL++, percentile_approx Greenwald-Khanna)
-    are folded into self-judging ``*_ok`` booleans — the oracle emits
-    literal TRUE, so a sketch drifting out of its error envelope flips
-    the bit and fails the driver hash (the recall-floor pattern)."""
-    from deployment_spark.operators.profiling import profile_numeric
-
-    cols = ["l_quantity", "l_extendedprice", "l_discount"]
-    li = _t(spark, sf_dir, "lineitem")
-    exact = profile_numeric(li, cols, exact=True)
-    sk = profile_numeric(li, cols, exact=False, rsd=0.05, percentile_accuracy=10000)
-    e, s = exact.alias("e"), sk.alias("s")
-    # HLL++ rsd=0.05 → 3σ envelope + small-count slack; GK at
-    # accuracy=10000 on this data is near-exact → tight relative band
-    distinct_ok = (
-        F.abs(F.col("s.n_distinct") - F.col("e.n_distinct"))
-        <= 0.15 * F.col("e.n_distinct") + F.lit(10)
-    )
-    median_ok = (
-        F.abs(F.col("s.median_v") - F.col("e.median_v"))
-        <= 0.05 * F.abs(F.col("e.median_v")) + F.lit(0.01)
-    )
-    return e.join(F.broadcast(s), "column").select(
-        "column",
-        F.col("e.rows").cast("long").alias("rows"),
-        F.col("e.nulls").cast("long").alias("nulls"),
-        F.col("e.n_distinct").cast("long").alias("n_distinct"),
-        F.col("e.min_v").alias("min_v"),
-        F.col("e.max_v").alias("max_v"),
-        F.col("e.mean_v").alias("mean_v"),
-        F.col("e.stddev_v").alias("stddev_v"),
-        F.col("e.median_v").alias("median_v"),
-        distinct_ok.alias("distinct_ok"),
-        median_ok.alias("median_ok"),
-    )
-
-
-SQL_PROFILE_SKETCH_BOUNDS = """
-SELECT 'l_quantity' AS "column", count(*)::BIGINT AS rows,
-       count(CASE WHEN l_quantity IS NULL THEN 1 END)::BIGINT AS nulls,
-       count(DISTINCT l_quantity)::BIGINT AS n_distinct,
-       round(min(l_quantity)::DOUBLE, 4) AS min_v,
-       round(max(l_quantity)::DOUBLE, 4) AS max_v,
-       round(avg(l_quantity), 4) AS mean_v,
-       round(stddev_samp(l_quantity), 4) AS stddev_v,
-       round(quantile_cont(l_quantity, 0.5)::DOUBLE, 4) AS median_v,
-       TRUE AS distinct_ok, TRUE AS median_ok
-FROM lineitem
-UNION ALL
-SELECT 'l_extendedprice', count(*)::BIGINT,
-       count(CASE WHEN l_extendedprice IS NULL THEN 1 END)::BIGINT,
-       count(DISTINCT l_extendedprice)::BIGINT,
-       round(min(l_extendedprice)::DOUBLE, 4),
-       round(max(l_extendedprice)::DOUBLE, 4),
-       round(avg(l_extendedprice), 4),
-       round(stddev_samp(l_extendedprice), 4),
-       round(quantile_cont(l_extendedprice, 0.5)::DOUBLE, 4),
-       TRUE, TRUE
-FROM lineitem
-UNION ALL
-SELECT 'l_discount', count(*)::BIGINT,
-       count(CASE WHEN l_discount IS NULL THEN 1 END)::BIGINT,
-       count(DISTINCT l_discount)::BIGINT,
-       round(min(l_discount)::DOUBLE, 4),
-       round(max(l_discount)::DOUBLE, 4),
-       round(avg(l_discount), 4),
-       round(stddev_samp(l_discount), 4),
-       round(quantile_cont(l_discount, 0.5)::DOUBLE, 4),
-       TRUE, TRUE
-FROM lineitem
 """
 
 

@@ -401,7 +401,9 @@ def test_drift_monitor_flags_distribution_shift(spark, sf_dir, tmp_path):
 def test_distributed_routing_matches_driver(index, queries_df):
     """route_distributed must produce the same (query_id, cluster_id)
     probe set as the driver-side router — same cosine, same
-    sim-desc/cluster-asc tie order — with no centroid collect."""
+    sim-desc/cluster-asc tie order — with no centroid collect. So at
+    partial nprobe the two routes of search and range_search (with and
+    without a per-query limit) return identical rows."""
     qrows = queries_df.collect()
     pairs, _ = index.route(qrows, nprobe=4)
     dist = {
@@ -409,6 +411,18 @@ def test_distributed_routing_matches_driver(index, queries_df):
         for r in index.route_distributed(queries_df, nprobe=4).collect()
     }
     assert dist == set(pairs)
+
+    def both(method, **kw):
+        return [
+            sorted(map(tuple, method(queries_df, nprobe=4, routing=r, **kw).collect()))
+            for r in ("driver", "distributed")
+        ]
+
+    drv, dst = both(index.search, k=5)
+    assert drv == dst and len(drv) == 5 * 8
+    for lim in (None, 7):
+        drv, dst = both(index.range_search, radius=0.3, limit_per_query=lim)
+        assert drv == dst and drv
 
 
 def test_distributed_search_exact_at_large_nlist(spark, tmp_path):

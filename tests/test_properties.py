@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -733,13 +733,18 @@ def test_keyset_pages_tile_ranking_random(spark, n, nq, k, dim, seed):
     assert got == exp
 
 
+_DROP_RECREATE = [
+    ("insert", 1), ("drop", 0), ("insert", 0), ("update", 0), ("replace", 0),
+]
+
+
 @PROP
 @given(
     ops=st.lists(
         st.tuples(
             st.sampled_from(
-                ["insert", "upsert", "delete", "compact", "vacuum", "meta",
-                 "sibling"]
+                ["insert", "upsert", "delete", "update", "replace", "drop",
+                 "compact", "vacuum", "meta", "sibling"]
             ),
             st.integers(min_value=0, max_value=9),
         ),
@@ -749,6 +754,9 @@ def test_keyset_pages_tile_ranking_random(spark, n, nq, k, dim, seed):
     mode=st.sampled_from(["cow", "mor"]),
     seed=st.integers(min_value=0, max_value=10_000),
 )
+# drop then re-create through the SAME handle
+@example(ops=_DROP_RECREATE, mode="cow", seed=1)
+@example(ops=_DROP_RECREATE, mode="mor", seed=1)
 def test_snapshot_store_matches_dict_model(spark, tmp_path_factory, ops, mode, seed):
     """Stateful model check of the store — the component whose claim /
     vacuum / meta logic all changed in r7. Random interleavings of
@@ -757,11 +765,13 @@ def test_snapshot_store_matches_dict_model(spark, tmp_path_factory, ops, mode, s
     model, versions move strictly forward, and commit meta is carried
     forward (never erased by compact/vacuum/meta-less mutations).
     ``sibling`` runs the next mutation through a second long-lived
-    handle on the same root; after every op the first handle's read()
-    must equal a fresh handle's, and a time-travel read of a random
-    surviving earlier version must equal the model recorded there —
-    the driver-side caches are keyed by durable state, so neither a
-    sibling's commits nor an old version can serve a stale entry."""
+    handle on the same root; ``drop`` resets the model, and the next
+    insert or replace re-creates the store on the dropped handle. After
+    every op the first handle's read() must equal a fresh handle's, and
+    a time-travel read of a random surviving earlier version must equal
+    the model recorded there — the driver-side caches are keyed by
+    durable state, so neither a sibling's commits nor an old version
+    can serve a stale entry."""
     import random
 
     from deployment_spark.operators.crud import SnapshotStore
@@ -815,6 +825,28 @@ def test_snapshot_store_matches_dict_model(spark, tmp_path_factory, ops, mode, s
             w.delete_ids(ks)
             for k in ks:
                 model.pop(k)
+        elif op == "update" and model:
+            # delete the sampled keys, re-insert all but one of them with
+            # new payloads plus one NEW id (update may move ids)
+            ks = rng.sample(sorted(model), min(arg + 1, len(model)))
+            rows = [(k, f"d{seed}-{k}-{arg}") for k in ks[1:]]
+            rows.append((next_id, f"d{seed}-{next_id}-{arg}"))
+            next_id += 1
+            w.update(ks, mk_rows(rows))
+            for k in ks:
+                model.pop(k)
+            model.update(dict(rows))
+        elif op == "replace":
+            keep = rng.sample(sorted(model), min(arg, len(model)))
+            rows = [(k, f"r{seed}-{k}-{arg}") for k in keep]
+            rows.append((next_id, f"r{seed}-{next_id}-{arg}"))
+            next_id += 1
+            w.replace(mk_rows(rows))  # create() when the store is absent
+            model = dict(rows)
+        elif op == "drop":
+            w.drop()
+            model, meta_model, history = {}, {}, {}
+            last_version = 0
         elif op == "compact" and w.exists():
             w.compact()
         elif op == "vacuum" and w.exists():

@@ -403,3 +403,30 @@ def test_search_tokens_doc_resolution_pruned_and_bounded(
     assert all(
         re.search(r"PartitionFilters: \[[^\]]*cluster_id", s) for s in token_scans
     ), token_scans  # every tokens-layout scan is cell-pruned
+
+    # the pruned cells come from IVFIndex.probe on either route: above
+    # AUTO_DISTRIBUTED_NLIST (list count patched in the quantizer
+    # metadata, as test_ivf.py's threshold pin does) the distributed
+    # route must probe exactly the driver-routed cells (nprobe 1: the
+    # 6 queries reach at most 6 of the 8 cells, so equality is not
+    # trivially "every cell")
+    import json
+    import os
+    from unittest import mock
+
+    from deployment_spark.operators.ivf import AUTO_DISTRIBUTED_NLIST, IVFIndex
+
+    driver_cells = tidx._probed_cells(qdf, 1)
+    assert 0 < len(driver_cells) < 8
+    meta_path = os.path.join(tidx.quantizer_root, "centroids.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    with open(meta_path, "w") as f:
+        json.dump(dict(meta, nlist=AUTO_DISTRIBUTED_NLIST + 1), f)
+    spy = mock.patch.object(
+        IVFIndex, "route_distributed", autospec=True,
+        side_effect=IVFIndex.route_distributed,
+    )
+    with spy as routed:
+        assert tidx._probed_cells(qdf, 1) == driver_cells
+    assert routed.called
