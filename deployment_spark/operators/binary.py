@@ -140,9 +140,9 @@ def hamming_topk_blocked(
 ) -> DataFrame:
     """Hamming top-k for CORPUS-SIZED query sets — ``hamming_topk``'s
     broadcast of the query set is the right interactive contract and
-    impossible for a 10⁶-query batch job. Same bipartite block-pair
-    form as ``similarity.topk_similarity_join_blocked``: queries hash
-    into QB blocks, corpus into CB blocks, each (qb, cb) pair is one
+    impossible for a 10⁶-query batch job. Same block-pair layout as
+    ``similarity.topk_similarity_join_blocked``
+    (``similarity._block_pair_frame``): each (qb, cb) pair is one
     task XOR-ing two bounded bit matrices (popcount via a 256-entry
     byte table — numpy-version independent), pre-reduced per query to
     the SAME composite order the global window uses: (distance asc
@@ -157,31 +157,23 @@ def hamming_topk_blocked(
     parity-tested, ulp-free (Hamming is integer arithmetic)."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    from deployment_spark.operators.similarity import _cid_sort_kind
-
-    qid_type = queries.schema[query_id].dataType
-    cid_type = corpus.schema[corpus_id].dataType
-    cid_kind = _cid_sort_kind(cid_type, "blocked hamming top-k")
-    QB = int(
-        num_query_blocks or max(1, -(-queries.count() // int(query_block_rows)))
+    from deployment_spark.operators.similarity import (
+        _block_pair_frame,
+        _cid_sort_kind,
+        _exact_scoring_core,
+        _typed_ids,
     )
-    CB = int(
-        num_corpus_blocks or max(1, -(-corpus.count() // int(corpus_block_rows)))
+
+    cid_kind = _cid_sort_kind(
+        corpus.schema[corpus_id].dataType, "blocked hamming top-k"
     )
     kk = int(k)
-    q = queries.select(
-        F.col(query_id).cast("string").alias("_qid"),
-        F.lit(None).cast("string").alias("_cid"),
-        F.col(query_bits).cast("array<long>").alias("_bits"),
-        F.pmod(F.xxhash64(F.col(query_id)), F.lit(QB)).cast("int").alias("_qb"),
-    ).withColumn("_cb", F.explode(F.sequence(F.lit(0), F.lit(CB - 1))))
-    c = corpus.select(
-        F.lit(None).cast("string").alias("_qid"),
-        F.col(corpus_id).cast("string").alias("_cid"),
-        F.col(bits_col).cast("array<long>").alias("_bits"),
-        F.pmod(F.xxhash64(F.col(corpus_id)), F.lit(CB)).cast("int").alias("_cb"),
-    ).withColumn("_qb", F.explode(F.sequence(F.lit(0), F.lit(QB - 1))))
-    both = q.unionByName(c.select(*q.columns))
+    both = _block_pair_frame(
+        queries, query_id, {"_bits": F.col(query_bits).cast("array<long>")},
+        corpus, corpus_id, {"_bits": F.col(bits_col).cast("array<long>")},
+        query_block_rows, corpus_block_rows, num_query_blocks, num_corpus_blocks,
+        drop_null_payload=False,
+    )
     out_schema = StructType(
         [
             StructField("_qid", StringType()),
@@ -189,22 +181,16 @@ def hamming_topk_blocked(
             StructField("_d", LongType()),
         ]
     )
+    _, _, _, split_pair = _exact_scoring_core()
 
     def pair_hamming_topk(pdf):
         import numpy as np
         import pandas as pd
 
-        is_q = pdf["_qid"].notna()
-        qp, cp = pdf[is_q], pdf[~is_q]
-        if qp.empty or cp.empty:
+        parts = split_pair(pdf, cid_kind)
+        if parts is None:
             return pd.DataFrame({"_qid": [], "_cid": [], "_d": []})
-        cid_arr = cp["_cid"].to_numpy()
-        if cid_kind == "int":
-            sort_all = cid_arr.astype(np.int64)
-        elif cid_kind == "float":
-            sort_all = cid_arr.astype(np.float64)
-        else:
-            sort_all = cid_arr
+        qp, cp, cid_arr, sort_all = parts
         vals = cp["_bits"].tolist()
         nn = np.array([i for i, v in enumerate(vals) if v is not None], dtype=np.int64)
         nulls = np.array([i for i, v in enumerate(vals) if v is None], dtype=np.int64)
@@ -243,11 +229,9 @@ def hamming_topk_blocked(
             out_d.extend([None] * len(null_order))
         return pd.DataFrame({"_qid": out_q, "_cid": out_c, "_d": out_d})
 
-    candidates = (
-        both.groupBy("_qb", "_cb")
-        .applyInPandas(pair_hamming_topk, schema=out_schema)
-        .withColumn("_qid", F.col("_qid").cast(qid_type))
-        .withColumn("_cid", F.col("_cid").cast(cid_type))
+    candidates = _typed_ids(
+        both.groupBy("_qb", "_cb").applyInPandas(pair_hamming_topk, schema=out_schema),
+        queries, query_id, corpus, corpus_id,
     )
     w = Window.partitionBy("_qid").orderBy(F.asc_nulls_last("_d"), F.asc("_cid"))
     return (

@@ -568,93 +568,25 @@ class IVFIndex:
         collect, correct for nlist in the 10⁴-10⁵ range where the
         quantizer itself is a distributed table.
 
-        Shape — the knn block pattern applied to the centroid table:
-        the (contract-bounded, nq-scale) query batch rides a broadcast;
-        each centroid-table partition runs ONE numpy matmul against it
-        and emits only its local per-query top-nprobe; a final window
-        merges the tasks × nq × nprobe survivors. Every exchange is
-        survivor-sized — a first cut aggregated with collect_list and
-        sliced AFTER the exchange, which collapsed row counts but still
-        shipped all nq×nlist scored structs as array payload; this
-        version truncates BEFORE anything is shuffled. Tie-break
-        matches the driver router: similarity desc, then cluster_id asc
-        (np.argsort is stable over index order)."""
-        import numpy as np
-        import pandas as pd
+        As in FAISS, whose coarse quantizer is itself an ``IndexFlat``,
+        routing IS exact top-k over the centroid table:
+        :func:`~deployment_spark.operators.similarity.topk_similarity_join`
+        with ``k = nprobe`` (the nq-scale query batch rides a broadcast,
+        each centroid-table partition emits its local per-query
+        top-nprobe, one window merges). :meth:`probe_batch` is the same
+        call on the blocked kernel. Tie-break matches the driver
+        router: similarity desc, then cluster_id asc."""
+        from deployment_spark.operators.similarity import topk_similarity_join
 
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        qrows = queries.select(query_id, query_vec).collect()  # nq-scale
-        spark = self.spark
-        if not qrows:
-            return (
-                queries.select(query_id)
-                .limit(0)
-                .withColumn("cluster_id", F.lit(0).cast("int"))
-            )
-        qids = [r[query_id] for r in qrows]
-        qmat = np.array([r[query_vec] for r in qrows], dtype=np.float64)
-        qmat = qmat / np.maximum(
-            np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12
-        )
-        bq = spark.sparkContext.broadcast((qids, qmat))
-        np_ = int(nprobe)
-        id_field = queries.select(query_id).schema.fields[0]
-        out_schema = StructType(
-            [
-                id_field,
-                StructField("cluster_id", self.centroids_df().schema["cluster_id"].dataType),
-                StructField("_neg", DoubleType()),
-            ]
-        )
-
-        def local_topk(batches):
-            qids_, qm = bq.value
-            neg_parts, cid_parts = [], []
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                cmat = np.array(pdf["centroid"].tolist(), dtype=np.float64)
-                cmat = cmat / np.maximum(
-                    np.linalg.norm(cmat, axis=1, keepdims=True), 1e-12
-                )
-                cids = pdf["cluster_id"].to_numpy()
-                sims = qm @ cmat.T  # (nq, nc_batch)
-                take = min(np_, sims.shape[1])
-                order = np.lexsort(
-                    (cids[None, :].repeat(len(qids_), 0), -sims), axis=1
-                )[:, :take]
-                rows = np.repeat(np.arange(len(qids_)), take)
-                cols = order.reshape(-1)
-                # keep per-part matrices (nq, take_i): takes differ per
-                # batch, so a flat concat would interleave queries
-                neg_parts.append((-sims[rows, cols]).reshape(len(qids_), take))
-                cid_parts.append(cids[cols].reshape(len(qids_), take))
-            if not neg_parts:
-                return
-            neg = np.hstack(neg_parts)
-            cid = np.hstack(cid_parts)
-            take = min(np_, neg.shape[1])
-            order = np.lexsort((cid, neg), axis=1)[:, :take]
-            rows = np.repeat(np.arange(len(qids_)), take)
-            cols = order.reshape(-1)
-            yield pd.DataFrame(
-                {
-                    id_field.name: np.repeat(np.array(qids_), take),
-                    "cluster_id": cid[rows, cols],
-                    "_neg": neg[rows, cols],
-                }
-            )
-
-        local = self.centroids_df().mapInPandas(local_topk, schema=out_schema)
-        w = Window.partitionBy(query_id).orderBy(
-            F.asc("_neg"), F.asc("cluster_id")
-        )
-        return (
-            local.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= np_)
-            .select(query_id, "cluster_id")
-        )
+        return topk_similarity_join(
+            self.centroids_df(),
+            queries,
+            k=int(nprobe),
+            corpus_id="cluster_id",
+            corpus_vec="centroid",
+            query_id=query_id,
+            query_vec=query_vec,
+        ).select(query_id, "cluster_id")
 
     def route(
         self,
@@ -710,13 +642,12 @@ class IVFIndex:
         ``qrows``: the batch's (query_id, query_vec) rows when the caller
         already collected them (the codec searches build LUTs or query
         broadcasts from them); otherwise the driver route's collect is
-        the emptiness check and the distributed route runs one
-        ``isEmpty``."""
+        the emptiness check, and on the distributed route an empty
+        batch is an empty probed-id collect."""
         if routing == "auto":
             routing = "driver" if self.nlist() <= AUTO_DISTRIBUTED_NLIST else "distributed"
         if routing == "distributed":
-            empty = queries.isEmpty() if qrows is None else not qrows
-            if empty:
+            if qrows is not None and not qrows:
                 return None, []
             routing_df = self.route_distributed(
                 queries, nprobe, query_id, query_vec
@@ -725,6 +656,8 @@ class IVFIndex:
                 r.cluster_id
                 for r in routing_df.select("cluster_id").distinct().collect()
             )
+            if not probed:
+                return None, []
             return routing_df, probed
         if qrows is None:
             qrows = queries.select(query_id, query_vec).collect()
@@ -1070,16 +1003,17 @@ class IVFIndex:
         from deployment_spark.operators.similarity import (
             _cid_sort_kind,
             _grouped_pair_hits,
+            _typed_ids,
         )
 
         lim = None if limit_per_query is None else int(limit_per_query)
         if queries.isEmpty():
             return self._range_empty(query_id, id_col, lim)
         data = self.data()
-        qid_type = queries.schema[query_id].dataType
-        cid_type = data.schema[id_col].dataType
         if lim is not None:
-            cid_kind = _cid_sort_kind(cid_type, "ivf batch range search with limit")
+            cid_kind = _cid_sort_kind(
+                data.schema[id_col].dataType, "ivf batch range search with limit"
+            )
         else:
             cid_kind = "str"  # no limit ⇒ no ranking ⇒ id order never applies
 
@@ -1091,10 +1025,9 @@ class IVFIndex:
             queries, probes, data, query_id, query_vec, id_col, vec_col,
             max_cluster_rows_per_task, salt_counts,
         )
-        hits = (
-            _grouped_pair_hits(pairs, group_cols, float(radius), lim, cid_kind)
-            .withColumn("_qid", F.col("_qid").cast(qid_type))
-            .withColumn("_cid", F.col("_cid").cast(cid_type))
+        hits = _typed_ids(
+            _grouped_pair_hits(pairs, group_cols, float(radius), lim, cid_kind),
+            queries, query_id, data, id_col,
         )
         if lim is None:
             return hits.select(
@@ -1165,14 +1098,13 @@ class IVFIndex:
         from deployment_spark.operators.similarity import (
             _cid_sort_kind,
             _grouped_pair_topk,
+            _typed_ids,
         )
 
         if queries.isEmpty():
             return self.search_empty(query_id, id_col)
         data = self.data()
-        qid_type = queries.schema[query_id].dataType
-        cid_type = data.schema[id_col].dataType
-        cid_kind = _cid_sort_kind(cid_type, "ivf batch search")
+        cid_kind = _cid_sort_kind(data.schema[id_col].dataType, "ivf batch search")
         kk = int(k)
 
         probes, data, salt_counts = self.probe_batch(
@@ -1183,10 +1115,9 @@ class IVFIndex:
             queries, probes, data, query_id, query_vec, id_col, vec_col,
             max_cluster_rows_per_task, salt_counts,
         )
-        candidates = (
-            _grouped_pair_topk(pairs, group_cols, kk, "cosine", cid_kind)
-            .withColumn("_qid", F.col("_qid").cast(qid_type))
-            .withColumn("_cid", F.col("_cid").cast(cid_type))
+        candidates = _typed_ids(
+            _grouped_pair_topk(pairs, group_cols, kk, "cosine", cid_kind),
+            queries, query_id, data, id_col,
         )
         w = Window.partitionBy("_qid").orderBy(F.desc("_sim"), F.asc("_cid"))
         return (

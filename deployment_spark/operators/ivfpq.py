@@ -449,15 +449,14 @@ class IVFPQIndex:
         from deployment_spark.operators.similarity import (
             _cid_sort_kind,
             _maybe_salt_hot_groups,
+            _typed_ids,
         )
 
         if queries.isEmpty():
             return self.ivf.search_empty(query_id, id_col)
         codes = self.codes()
         codec = self.codec()
-        qid_type = queries.schema[query_id].dataType
-        cid_type = codes.schema[id_col].dataType
-        cid_kind = _cid_sort_kind(cid_type, "ivfpq batch search")
+        cid_kind = _cid_sort_kind(codes.schema[id_col].dataType, "ivfpq batch search")
         take = int(k) if shortlist is None else max(int(shortlist), int(k))
 
         # null codes are excluded: one would crash the b''.join inside
@@ -486,13 +485,12 @@ class IVFPQIndex:
         )
 
         books_bc = self.spark.sparkContext.broadcast(codec.codebooks)
-        cand = (
+        cand = _typed_ids(
             _grouped_adc_topk(
                 q.unionByName(c.select(*q.columns)), group_cols, take,
                 books_bc, codec.m, codec.dsub, cid_kind,
-            )
-            .withColumn("_qid", F.col("_qid").cast(qid_type))
-            .withColumn("_cid", F.col("_cid").cast(cid_type))
+            ),
+            queries, query_id, codes, id_col,
         )
         return self._finalize(cand, int(k), shortlist, None, query_id, id_col,
                               vec_col, queries, query_vec,

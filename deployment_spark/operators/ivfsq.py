@@ -303,15 +303,14 @@ class IVFSQIndex:
             _cid_sort_kind,
             _grouped_pair_topk,
             _maybe_salt_hot_groups,
+            _typed_ids,
         )
 
         if queries.isEmpty():
             return self.ivf.search_empty(query_id, id_col)
         codes = self.codes()
         codec = self.codec()
-        qid_type = queries.schema[query_id].dataType
-        cid_type = codes.schema[id_col].dataType
-        cid_kind = _cid_sort_kind(cid_type, "ivfsq batch search")
+        cid_kind = _cid_sort_kind(codes.schema[id_col].dataType, "ivfsq batch search")
         take = int(k) if shortlist is None else max(int(shortlist), int(k))
 
         # null codes are excluded: a null codes array would crash the
@@ -347,13 +346,12 @@ class IVFSQIndex:
             arr = np.array(cp["_code"].tolist(), dtype=np.float64)
             return lo + (arr + 128.0) * scale
 
-        cand = (
+        cand = _typed_ids(
             _grouped_pair_topk(
                 q.unionByName(c.select(*q.columns)), group_cols, take,
                 "dot", cid_kind, corpus_decode=decode_codes,
-            )
-            .withColumn("_qid", F.col("_qid").cast(qid_type))
-            .withColumn("_cid", F.col("_cid").cast(cid_type))
+            ),
+            queries, query_id, codes, id_col,
         )
         w = Window.partitionBy("_qid").orderBy(F.desc("_sim"), F.asc("_cid"))
         short = cand.withColumn("rank", F.row_number().over(w)).filter(

@@ -68,6 +68,40 @@ def _final_topk(candidates: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _knn_kernel():
+    """The local top-k of every kNN-graph task, NESTED so cloudpickle
+    ships it by value (the ``similarity._exact_scoring_core``
+    contract). ``local_topk(q_ids, q_mat, c_ids, c_mat, k)``: over
+    row-normalized matrices, each query's k best corpus rows other than
+    itself (a same-id pair is masked to -inf and never emitted), in the
+    SAME composite order as the global window (cosine desc, dst_id asc)
+    so pre-reduction can never drop a row the final window would keep.
+    Returns an ``_EDGE_SCHEMA``-typed (src_id, dst_id, cosine) frame."""
+
+    def local_topk(q_ids, q_mat, c_ids, c_mat, k):
+        import numpy as np
+        import pandas as pd
+
+        sims = q_mat @ c_mat.T  # (nq, nc)
+        sims = np.where(q_ids[:, None] == c_ids[None, :], -np.inf, sims)
+        take = min(k, sims.shape[1])
+        order = np.lexsort((c_ids[None, :].repeat(len(q_ids), 0), -sims), axis=1)[
+            :, :take
+        ]
+        rows = np.repeat(np.arange(len(q_ids)), take)
+        cols = order.reshape(-1)
+        keep = sims[rows, cols] > -np.inf
+        return pd.DataFrame(
+            {
+                "src_id": np.repeat(q_ids, take)[keep],
+                "dst_id": c_ids[cols][keep],
+                "cosine": sims[rows, cols][keep],
+            }
+        ).astype({"src_id": "int64", "dst_id": "int64", "cosine": "float64"})
+
+    return local_topk
+
+
 def knn_graph(
     df: DataFrame,
     k: int = 10,
@@ -79,8 +113,8 @@ def knn_graph(
     """Exact cosine kNN graph: for every vector, its k nearest OTHER
     vectors. Output (src_id, dst_id, rank, cosine), rank 1..k per src.
 
-    Distributed block-pair form (same partitioning as
-    ``similarity.cosine_neardup_pairs_exact``): rows hash into B blocks,
+    Distributed block-pair form (``similarity._self_block_pairs``, the
+    layout of ``similarity.cosine_neardup_pairs_exact``): rows hash into B blocks,
     each block-pair task runs one numpy matmul and emits only each
     present id's local top-k — O(N·B·k) survivor rows — then one global
     window finalizes. Peak task memory is two blocks, independent of N.
@@ -88,74 +122,34 @@ def knn_graph(
     import numpy as np
     import pandas as pd
 
-    if num_blocks is None:
-        n = df.count()  # O(1) aggregate, not a collect
-        num_blocks = max(1, -(-n // target_block_rows))
-    B = int(num_blocks)
-    kk = int(k)
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("_id"), F.col(vec_col).alias("_vec")
-    ).withColumn("_blk", F.pmod(F.xxhash64(F.col("_id")), F.lit(B)).cast("int"))
-    exploded = (
-        src.withColumn("_o", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
-        .withColumn("_pi", F.least("_blk", "_o"))
-        .withColumn("_pj", F.greatest("_blk", "_o"))
-        .drop("_o")
+    from deployment_spark.operators.similarity import (
+        _exact_scoring_core,
+        _self_block_pairs,
     )
 
-    def local_topk(key, pdf):
+    exploded = _self_block_pairs(df, id_col, vec_col, num_blocks, target_block_rows)
+    kk = int(k)
+    normalize_rows = _exact_scoring_core()[0]
+    local_topk = _knn_kernel()
+
+    def block_pair_topk(key, pdf):
         i, j = key
-        mat = np.array(pdf["_vec"].tolist(), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        mat = mat / norms
+        mat = normalize_rows(np.array(pdf["_vec"].tolist(), dtype=np.float64))
         ids = pdf["_id"].to_numpy(dtype=np.int64)
-        blk = pdf["_blk"].to_numpy()
-        out_src, out_dst, out_cos = [], [], []
-
-        def emit(q_ids, q_mat, c_ids, c_mat, exclude_self):
-            if len(q_ids) == 0 or len(c_ids) == 0:
-                return
-            sims = q_mat @ c_mat.T  # (nq, nc)
-            if exclude_self:
-                # same id on both sides ⇒ mask the diagonal matches
-                eq = q_ids[:, None] == c_ids[None, :]
-                sims = np.where(eq, -np.inf, sims)
-            take = min(kk, sims.shape[1])
-            # local top-k with the SAME composite order as the global
-            # window (cosine desc, dst_id asc) so pre-reduction can never
-            # drop a row the final window would keep
-            order = np.lexsort((c_ids[None, :].repeat(len(q_ids), 0), -sims), axis=1)[
-                :, :take
-            ]
-            rows = np.repeat(np.arange(len(q_ids)), take)
-            cols = order.reshape(-1)
-            keep = sims[rows, cols] > -np.inf
-            out_src.append(np.repeat(q_ids, take)[keep])
-            out_dst.append(c_ids[cols][keep])
-            out_cos.append(sims[rows, cols][keep])
-
         if i == j:
-            emit(ids, mat, ids, mat, exclude_self=True)
-        else:
-            li, rj = blk == i, blk == j
-            emit(ids[li], mat[li], ids[rj], mat[rj], exclude_self=False)
-            emit(ids[rj], mat[rj], ids[li], mat[li], exclude_self=False)
-        if not out_src:
-            return pd.DataFrame({"src_id": [], "dst_id": [], "cosine": []}).astype(
-                {"src_id": "int64", "dst_id": "int64", "cosine": "float64"}
-            )
-        return pd.DataFrame(
-            {
-                "src_id": np.concatenate(out_src),
-                "dst_id": np.concatenate(out_dst),
-                "cosine": np.concatenate(out_cos),
-            }
+            return local_topk(ids, mat, ids, mat, kk)
+        blk = pdf["_blk"].to_numpy()
+        li, rj = blk == i, blk == j
+        return pd.concat(
+            [
+                local_topk(ids[li], mat[li], ids[rj], mat[rj], kk),
+                local_topk(ids[rj], mat[rj], ids[li], mat[li], kk),
+            ],
+            ignore_index=True,
         )
 
     candidates = exploded.groupBy("_pi", "_pj").applyInPandas(
-        local_topk, schema=_EDGE_SCHEMA
+        block_pair_topk, schema=_EDGE_SCHEMA
     )
     return _final_topk(candidates, kk)
 
@@ -215,10 +209,11 @@ def knn_graph_clustered(
     the exact graph is floor-gated in ``tests/test_knn.py``.
     """
     import numpy as np
-    import pandas as pd
 
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
+
+    from deployment_spark.operators.similarity import _exact_scoring_core
 
     feat = df.select(
         F.col(id_col).cast("long").alias("_id"), F.col(vec_col).alias("_vec")
@@ -277,35 +272,14 @@ def knn_graph_clustered(
     tagged = members.unionByName(probers)
     kk = int(k)
 
+    normalize_rows = _exact_scoring_core()[0]
+    local_topk = _knn_kernel()
+
     def cluster_topk(key, pdf):
-        mat = np.array(pdf["_vec"].tolist(), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        mat = mat / norms
+        mat = normalize_rows(np.array(pdf["_vec"].tolist(), dtype=np.float64))
         ids = pdf["_id"].to_numpy(dtype=np.int64)
         is_m = pdf["_is_member"].to_numpy() == 1
-        c_ids, c_mat = ids[is_m], mat[is_m]
-        q_ids, q_mat = ids[~is_m], mat[~is_m]
-        if len(q_ids) == 0 or len(c_ids) == 0:
-            return pd.DataFrame({"src_id": [], "dst_id": [], "cosine": []}).astype(
-                {"src_id": "int64", "dst_id": "int64", "cosine": "float64"}
-            )
-        sims = q_mat @ c_mat.T
-        sims = np.where(q_ids[:, None] == c_ids[None, :], -np.inf, sims)
-        take = min(kk, sims.shape[1])
-        order = np.lexsort((c_ids[None, :].repeat(len(q_ids), 0), -sims), axis=1)[
-            :, :take
-        ]
-        rows = np.repeat(np.arange(len(q_ids)), take)
-        cols = order.reshape(-1)
-        keep = sims[rows, cols] > -np.inf
-        return pd.DataFrame(
-            {
-                "src_id": np.repeat(q_ids, take)[keep],
-                "dst_id": c_ids[cols][keep],
-                "cosine": sims[rows, cols][keep],
-            }
-        )
+        return local_topk(ids[~is_m], mat[~is_m], ids[is_m], mat[is_m], kk)
 
     candidates = tagged.groupBy("_grp").applyInPandas(cluster_topk, schema=_EDGE_SCHEMA)
     # a vector can meet the same dst in several probed clusters — dedup

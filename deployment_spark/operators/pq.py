@@ -70,6 +70,9 @@ def _grouped_adc_topk(both, group_cols, take, books_bc, m, dsub, cid_kind):
     package, the _exact_scoring_core contract)."""
     from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
+    from deployment_spark.operators.similarity import _exact_scoring_core
+
+    _, _, _, split_pair = _exact_scoring_core()
     out_schema = StructType(
         [
             StructField("_qid", StringType()),
@@ -82,21 +85,14 @@ def _grouped_adc_topk(both, group_cols, take, books_bc, m, dsub, cid_kind):
         import numpy as np
         import pandas as pd
 
-        is_q = pdf["_qid"].notna()
-        qp, cp = pdf[is_q], pdf[~is_q]
-        if qp.empty or cp.empty:
+        parts = split_pair(pdf, cid_kind)
+        if parts is None:
             return pd.DataFrame({"_qid": [], "_cid": [], "_d": []})
+        qp, cp, cid_arr, sort_ids = parts
         books = books_bc.value
         codes_arr = np.frombuffer(
             b"".join(cp["_code"].tolist()), dtype=np.uint8
         ).reshape(-1, m)
-        cid_arr = cp["_cid"].to_numpy()
-        if cid_kind == "int":
-            sort_ids = cid_arr.astype(np.int64)
-        elif cid_kind == "float":
-            sort_ids = cid_arr.astype(np.float64)
-        else:
-            sort_ids = cid_arr
         tk = min(take, codes_arr.shape[0])
         gather = np.arange(m)[None, :]
         out_q, out_c, out_d = [], [], []
@@ -288,66 +284,45 @@ class PQCodec:
         """ADC top-k for CORPUS-SIZED query sets — the offline-scoring
         sibling of :meth:`search`, which collects the query batch and
         broadcasts one LUT per query (the FAISS contract, impossible
-        for a 10⁶-query job). Same bipartite block-pair form as
-        ``similarity.topk_similarity_join_blocked``: queries hash into
-        QB blocks, CODES into CB blocks, each (qb, cb) pair is one
-        independent task that rebuilds its queries' (m × ksub) LUTs
-        in-task from the broadcast codebooks (identical expression to
-        the interactive path, so distances are bit-identical) and
-        gathers ADC distances over the code block. NOTHING query-scale
-        touches the driver; the shuffle carries m-BYTE codes ×QB and
-        queries ×CB plus nq·k·CB survivors — the compressed
-        representation is what replicates, which is the point of PQ at
-        100 TB. Code blocks default 8× larger than query blocks (a
-        65,536-row block of m=16 codes is ~1 MB; the per-task LUT
-        rebuild amortizes over it).
+        for a 10⁶-query job). Same block-pair layout as
+        ``similarity.topk_similarity_join_blocked``
+        (``similarity._block_pair_frame``), with CODES as the corpus
+        side: each (qb, cb) pair is one independent task that rebuilds
+        its queries' (m × ksub) LUTs in-task from the broadcast
+        codebooks (identical expression to the interactive path, so
+        distances are bit-identical) and gathers ADC distances over the
+        code block. NOTHING query-scale touches the driver; the shuffle
+        carries m-BYTE codes ×QB and queries ×CB plus nq·k·CB survivors
+        — the compressed representation is what replicates, which is
+        the point of PQ at 100 TB. Code blocks default 8× larger than
+        query blocks (a 65,536-row block of m=16 codes is ~1 MB; the
+        per-task LUT rebuild amortizes over it).
 
         Output and tie-breaks identical to :meth:`search`
         (query_id, vec_id, rank, adc_distance) — parity-tested
         bit-exact."""
-        from deployment_spark.operators.similarity import _cid_sort_kind
+        from deployment_spark.operators.similarity import (
+            _block_pair_frame,
+            _cid_sort_kind,
+            _typed_ids,
+        )
 
-        spark = codes.sparkSession
-        qid_type = queries.schema[query_id].dataType
-        cid_type = codes.schema[id_col].dataType
-        cid_kind = _cid_sort_kind(cid_type, "pq batch search")
-        QB = int(
-            num_query_blocks
-            or max(1, -(-queries.count() // int(query_block_rows)))
-        )
-        CB = int(
-            num_code_blocks or max(1, -(-codes.count() // int(code_block_rows)))
-        )
+        cid_kind = _cid_sort_kind(codes.schema[id_col].dataType, "pq batch search")
         kk = int(k)
-        # ids transit the pandas stage as strings (nullable-int64 →
-        # float64 Arrow corruption above 2^53); cast back before the
-        # window so the tie-break stays typed — same contract as the
-        # blocked exact path
-        # null-vec queries / null-code rows are excluded codegen-side:
-        # they cannot be scored (the interactive path fails on them at
-        # its driver collect), and here they must never reach the task
-        q = queries.filter(F.col(query_vec).isNotNull()).select(
-            F.col(query_id).cast("string").alias("_qid"),
-            F.lit(None).cast("string").alias("_cid"),
-            F.col(query_vec).cast("array<double>").alias("_vec"),
-            F.lit(None).cast("binary").alias("_code"),
-            F.pmod(F.xxhash64(F.col(query_id)), F.lit(QB)).cast("int").alias("_qb"),
-        ).withColumn("_cb", F.explode(F.sequence(F.lit(0), F.lit(CB - 1))))
-        c = codes.filter(F.col("code").isNotNull()).select(
-            F.lit(None).cast("string").alias("_qid"),
-            F.col(id_col).cast("string").alias("_cid"),
-            F.lit(None).cast("array<double>").alias("_vec"),
-            F.col("code").alias("_code"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(CB)).cast("int").alias("_cb"),
-        ).withColumn("_qb", F.explode(F.sequence(F.lit(0), F.lit(QB - 1))))
-        both = q.unionByName(c.select(*q.columns))
-        books_bc = spark.sparkContext.broadcast(self.codebooks)
-        candidates = (
+        # null-vec queries / null-code rows are excluded before the
+        # shuffle: they cannot be scored (the interactive path fails on
+        # them at its driver collect)
+        both = _block_pair_frame(
+            queries, query_id, {"_vec": F.col(query_vec).cast("array<double>")},
+            codes, id_col, {"_code": F.col("code")},
+            query_block_rows, code_block_rows, num_query_blocks, num_code_blocks,
+        )
+        books_bc = codes.sparkSession.sparkContext.broadcast(self.codebooks)
+        candidates = _typed_ids(
             _grouped_adc_topk(
                 both, ["_qb", "_cb"], kk, books_bc, self.m, self.dsub, cid_kind
-            )
-            .withColumn("_qid", F.col("_qid").cast(qid_type))
-            .withColumn("_cid", F.col("_cid").cast(cid_type))
+            ),
+            queries, query_id, codes, id_col,
         )
         w = Window.partitionBy("_qid").orderBy(F.asc("_d"), F.asc("_cid"))
         return (

@@ -199,7 +199,30 @@ def _exact_scoring_core():
 
         return np.lexsort((sort_ids, -sims_col))[:take]
 
-    return normalize_rows, pair_scores, tie_aware_order
+    def split_pair(pdf, cid_kind):
+        """One group of a union frame (see _block_pair_frame) split into
+        its query rows and corpus rows, or None when either side is
+        empty; plus the corpus ids as transported (strings) and as the
+        TYPED global window orders them ("10" < "9" as strings, but
+        9 < 10 as the window sees them — a tied candidate at the local
+        k-boundary would otherwise be pre-reduced away in favor of one
+        the window discards; _cid_sort_kind resolves ``cid_kind``)."""
+        import numpy as np
+
+        is_q = pdf["_qid"].notna()
+        qp, cp = pdf[is_q], pdf[~is_q]
+        if qp.empty or cp.empty:
+            return None
+        cid_arr = cp["_cid"].to_numpy()
+        if cid_kind == "int":
+            sort_ids = cid_arr.astype(np.int64)
+        elif cid_kind == "float":
+            sort_ids = cid_arr.astype(np.float64)
+        else:
+            sort_ids = cid_arr
+        return qp, cp, cid_arr, sort_ids
+
+    return normalize_rows, pair_scores, tie_aware_order, split_pair
 
 
 def topk_similarity_join(
@@ -236,7 +259,7 @@ def topk_similarity_join(
 
     import numpy as np
 
-    _normalize_rows, _pair_scores, _tie_aware_order = _exact_scoring_core()
+    _normalize_rows, _pair_scores, _tie_aware_order, _ = _exact_scoring_core()
     qids = [r[query_id] for r in qrows]
     qmat = np.array([r[query_vec] for r in qrows], dtype=np.float64)
     if metric == "cosine":
@@ -379,47 +402,18 @@ _PAIR_TOPK_SCHEMA = StructType(
 )
 
 
-def _salt_hot_groups(q, c, counts_src, bound, group_key="cluster_id"):
-    """Sub-block salting for hot groups — the IVF-skew guard shared by
-    the IVF / IVF×PQ / IVF×SQ8 batch searchers. Groups in ``counts_src``
-    larger than ``bound`` rows split into ceil(n/bound) salts: corpus
-    rows take ONE salt by id hash, probing queries replicate across the
-    group's salts, so the per-task matrix stays bounded while
-    local-global top-k stays exact (every (query, salt) emits its
-    tie-aware local top-k; the global window merges). Costs one
-    group-count aggregate (one row per cluster, never row-scale) plus
-    two broadcast joins of that tiny salt table. Returns the salted
-    (q, c, group_cols)."""
-    bound = int(bound)
-    salts = (
-        counts_src.groupBy(group_key)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .select(
-            F.col(group_key).alias("_g"),
-            F.greatest(F.lit(1), F.ceil(F.col("_n") / F.lit(bound)))
-            .cast("int")
-            .alias("_ns"),
-        )
-    )
-    c = (
-        c.join(F.broadcast(salts), "_g")
-        .withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("_cid")), F.col("_ns")).cast("int")
-        )
-        .drop("_ns")
-    )
-    q = (
-        q.join(F.broadcast(salts), "_g")
-        .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.col("_ns") - 1)))
-        .drop("_ns")
-    )
-    return q, c, ["_g", "_salt"]
-
-
 def _maybe_salt_hot_groups(q, c, counts_src, bound, group_key="cluster_id",
                            counts=None):
-    """Default-on wrapper around :func:`_salt_hot_groups` (r9): run the
-    group-count aggregate, and salt ONLY when some group actually
+    """Sub-block salting for hot groups — the IVF-skew guard shared by
+    the IVF / IVF×PQ / IVF×SQ8 batch searchers, on by default (r9).
+    Groups larger than ``bound`` rows split into ceil(n/bound) salts:
+    corpus rows take ONE salt by id hash, probing queries replicate
+    across the group's salts, so the per-task matrix stays bounded
+    while local-global top-k stays exact (every (query, salt) emits its
+    tie-aware local top-k; the global window merges). Returns the
+    salted (q, c, group_cols).
+
+    Salting runs ONLY when some group actually
     exceeds ``bound`` rows. A balanced nlist ≈ √N layout pays one count
     job whose output is nlist-bounded and ZERO extra joins; a skewed
     corpus gets the bounded plan WITHOUT caller opt-in — the unsalted
@@ -487,7 +481,7 @@ def _maybe_salt_hot_groups(q, c, counts_src, bound, group_key="cluster_id",
 
 
 def _grouped_pair_topk(both, group_cols, kk, metric, cid_kind,
-                       out_schema=None, corpus_decode=None):
+                       corpus_decode=None):
     """groupBy(group_cols).applyInPandas local top-k over a union frame
     carrying string-transported (_qid, _cid, _vec) — the scoring task
     shared by the hash-blocked exact path (group = (_qb, _cb)) and the
@@ -504,13 +498,13 @@ def _grouped_pair_topk(both, group_cols, kk, metric, cid_kind,
     import numpy as np
     import pandas as pd
 
-    _, _pair_scores, _tie_aware_order = _exact_scoring_core()
+    _, _pair_scores, _tie_aware_order, _split_pair = _exact_scoring_core()
 
     def pair_topk(pdf):
-        is_q = pdf["_qid"].notna()
-        qp, cp = pdf[is_q], pdf[~is_q]
-        if qp.empty or cp.empty:
+        parts = _split_pair(pdf, cid_kind)
+        if parts is None:
             return pd.DataFrame({"_qid": [], "_cid": [], "_sim": []})
+        qp, cp, cid_arr, sort_ids = parts
         qmat = np.array(qp["_vec"].tolist(), dtype=np.float64)
         cmat = (
             corpus_decode(cp)
@@ -519,13 +513,6 @@ def _grouped_pair_topk(both, group_cols, kk, metric, cid_kind,
         )
         sims = _pair_scores(qmat, cmat, metric)  # (nc_local, nq_local)
         take = min(kk, sims.shape[0])
-        cid_arr = cp["_cid"].to_numpy()
-        if cid_kind == "int":
-            sort_ids = cid_arr.astype(np.int64)
-        elif cid_kind == "float":
-            sort_ids = cid_arr.astype(np.float64)
-        else:
-            sort_ids = cid_arr
         out_q, out_c, out_s = [], [], []
         for j, qid in enumerate(qp["_qid"]):
             order = _tie_aware_order(sims[:, j], sort_ids, take)
@@ -535,7 +522,7 @@ def _grouped_pair_topk(both, group_cols, kk, metric, cid_kind,
         return pd.DataFrame({"_qid": out_q, "_cid": out_c, "_sim": out_s})
 
     return both.groupBy(*group_cols).applyInPandas(
-        pair_topk, schema=out_schema or _PAIR_TOPK_SCHEMA
+        pair_topk, schema=_PAIR_TOPK_SCHEMA
     )
 
 
@@ -551,24 +538,17 @@ def _grouped_pair_hits(both, group_cols, radius, lim, cid_kind):
     import numpy as np
     import pandas as pd
 
-    _, _pair_scores, _tie_aware_order = _exact_scoring_core()
+    _, _pair_scores, _tie_aware_order, _split_pair = _exact_scoring_core()
     rad = float(radius)
 
     def pair_hits(pdf):
-        is_q = pdf["_qid"].notna()
-        qp, cp = pdf[is_q], pdf[~is_q]
-        if qp.empty or cp.empty:
+        parts = _split_pair(pdf, cid_kind)
+        if parts is None:
             return pd.DataFrame({"_qid": [], "_cid": [], "_sim": []})
+        qp, cp, cid_arr, sort_ids = parts
         qmat = np.array(qp["_vec"].tolist(), dtype=np.float64)
         cmat = np.array(cp["_vec"].tolist(), dtype=np.float64)
         sims = _pair_scores(qmat, cmat, "cosine")  # (nc_local, nq_local)
-        cid_arr = cp["_cid"].to_numpy()
-        if cid_kind == "int":
-            sort_ids = cid_arr.astype(np.int64)
-        elif cid_kind == "float":
-            sort_ids = cid_arr.astype(np.float64)
-        else:
-            sort_ids = cid_arr
         out_q, out_c, out_s = [], [], []
         for j, qid in enumerate(qp["_qid"]):
             hit = np.nonzero(sims[:, j] >= rad)[0]
@@ -585,6 +565,79 @@ def _grouped_pair_hits(both, group_cols, radius, lim, cid_kind):
     return both.groupBy(*group_cols).applyInPandas(
         pair_hits, schema=_PAIR_TOPK_SCHEMA
     )
+
+
+def _block_pair_frame(
+    queries: DataFrame,
+    query_id: str,
+    query_payload: dict,
+    corpus: DataFrame,
+    corpus_id: str,
+    corpus_payload: dict,
+    query_block_rows: int,
+    corpus_block_rows: int,
+    num_query_blocks: int | None = None,
+    num_corpus_blocks: int | None = None,
+    drop_null_payload: bool = True,
+) -> DataFrame:
+    """The bipartite block-pair layout of every blocked operator
+    (:func:`topk_similarity_join_blocked`, :func:`radius_search_blocked`,
+    ``binary.hamming_topk_blocked``, ``PQCodec.search_batch``,
+    ``SQCodec.search_batch``): one union frame that, grouped by
+    ``(_qb, _cb)``, puts every query block next to every corpus block —
+    each pair is one independent task over two bounded blocks, so
+    nothing query-scale is collected or broadcast and peak task memory
+    is two blocks, independent of nq AND N.
+
+    - Sizing: queries hash into QB blocks, corpus into CB; one count
+      aggregate per side (no rows to the driver) unless the caller
+      passes ``num_query_blocks`` / ``num_corpus_blocks`` (the auto
+      routers reuse their routing count this way).
+    - Hashing and replication: ``_qb`` / ``_cb`` are the xxhash64 of
+      the TYPED id; each query row is exploded across all CB corpus
+      blocks and each corpus row across all QB query blocks — the
+      shuffle is |queries|·CB + |corpus|·QB input rows.
+    - Payload: ``{name: Column}`` per side over that side's frame; a
+      column one side lacks is a typed null on it. With
+      ``drop_null_payload`` rows with a null payload are excluded
+      codegen-side before the shuffle, so they never reach the numpy
+      task (each operator keeps its own null policy).
+    - String id transport: ids travel the pandas stage as STRINGS in
+      ``_qid`` / ``_cid``. The union necessarily has a null id column
+      per side, and Arrow→pandas turns a nullable int64 into float64 —
+      silently corrupting ids above 2^53 (snowflake-scale). A string
+      round-trips losslessly for every id type :func:`_cid_sort_kind`
+      admits, the in-task tie-break re-types it (``split_pair`` of
+      :func:`_exact_scoring_core`), and :func:`_typed_ids` casts both
+      ids back before the global window, so the tie-break and the
+      output schema are bit-identical to the broadcast paths. The
+      query rows of a group are those with a non-null ``_qid``."""
+    QB = int(num_query_blocks or max(1, -(-queries.count() // int(query_block_rows))))
+    CB = int(num_corpus_blocks or max(1, -(-corpus.count() // int(corpus_block_rows))))
+
+    def side(df, id_col, payload, id_name, key, n_key, other, n_other):
+        if drop_null_payload:
+            for col in payload.values():
+                df = df.filter(col.isNotNull())
+        return df.select(
+            F.col(id_col).cast("string").alias(id_name),
+            *[col.alias(name) for name, col in payload.items()],
+            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_key)).cast("int").alias(key),
+        ).withColumn(other, F.explode(F.sequence(F.lit(0), F.lit(n_other - 1))))
+
+    q = side(queries, query_id, query_payload, "_qid", "_qb", QB, "_cb", CB)
+    c = side(corpus, corpus_id, corpus_payload, "_cid", "_cb", CB, "_qb", QB)
+    return q.unionByName(c, allowMissingColumns=True)
+
+
+def _typed_ids(candidates, queries, query_id, corpus, corpus_id):
+    """Cast a grouped task's string-transported ``_qid`` / ``_cid`` back
+    to the caller's id types BEFORE the global window: exact type (and
+    tie-break) parity with the broadcast paths (see
+    :func:`_block_pair_frame`)."""
+    return candidates.withColumn(
+        "_qid", F.col("_qid").cast(queries.schema[query_id].dataType)
+    ).withColumn("_cid", F.col("_cid").cast(corpus.schema[corpus_id].dataType))
 
 
 def topk_similarity_join_blocked(
@@ -606,87 +659,35 @@ def topk_similarity_join_blocked(
     :func:`topk_similarity_join`'s broadcast contract breaks: there is
     no driver or task that can hold the query matrix.
 
-    Bipartite block-pair form (the same partitioning argument as
-    ``knn.knn_graph``, which is this operator's self-join special case):
-    queries hash into QB blocks, corpus into CB blocks, and every
-    (qb, cb) pair becomes one independent task — one numpy matmul over
-    two bounded blocks, pre-reduced to each present query's local top-k
-    with the SAME composite order (sim desc, corpus id asc) as the
-    global window, so pre-reduction can never drop a row the final
-    window would keep. One global window over the nq·k·CB survivors
-    finalizes. Nothing is ever collected or broadcast; peak task memory
-    is two blocks, independent of nq AND N; shuffle volume is
-    |queries|·CB + |corpus|·QB input rows plus nq·k·CB survivors.
+    Bipartite block-pair form (:func:`_block_pair_frame`; the same
+    partitioning argument as ``knn.knn_graph``, which is this
+    operator's self-join special case): every (qb, cb) pair becomes one
+    task — one numpy matmul over two bounded blocks, pre-reduced to
+    each present query's local top-k with the SAME composite order (sim
+    desc, corpus id asc) as the global window, so pre-reduction can
+    never drop a row the final window would keep. One global window
+    over the nq·k·CB survivors finalizes.
 
     Output and semantics are identical to :func:`topk_similarity_join`
     (exact, deterministic ties) — property-tested for parity."""
     if metric not in ("cosine", "dot", "ip", "l2"):
         raise ValueError(f"unknown metric {metric!r}")
-    import numpy as np
-    import pandas as pd
-
-    spark = corpus.sparkSession
-    qid_type = queries.schema[query_id].dataType
-    cid_type = corpus.schema[corpus_id].dataType
-    # ids travel through the pandas stage as STRINGS: the union frame
-    # necessarily has a null id column per side, and Arrow→pandas turns
-    # a nullable int64 into float64 — silently corrupting ids above 2^53
-    # (snowflake-scale). String round-trips losslessly for the int/string
-    # ids this module supports (_PAIR_TOPK_SCHEMA is that transport
-    # shape), and both ids are cast BACK to their real types before the
-    # global window so the tie-break (and the output schema) is
-    # bit-identical to the broadcast path.
-    # single count aggregates (no rows to the driver) to size the block
-    # grids — pass num_query_blocks / num_corpus_blocks to skip them
-    # when the caller already knows the sizes (topk_similarity_join_auto
-    # reuses its routing count this way)
-    QB = int(num_query_blocks or max(1, -(-queries.count() // int(query_block_rows))))
-    CB = int(num_corpus_blocks or max(1, -(-corpus.count() // int(corpus_block_rows))))
+    cid_kind = _cid_sort_kind(corpus.schema[corpus_id].dataType, "blocked top-k")
     kk = int(k)
-
-    # one frame; vectors unified to double for the matmul. NULL-vector
-    # rows are excluded on BOTH sides before the shuffle (codegen
-    # filter, nothing reaches the numpy task): a null corpus vector
-    # can never rank (the broadcast sibling's null cosine sorts last
-    # and surfaces only when a query has fewer than k non-null
-    # candidates), and a null query vector returns no rows — the same
-    # contract as radius_search's null-sim drop
-    q = (
-        queries.filter(F.col(query_vec).isNotNull())
-        .select(
-            F.col(query_id).cast("string").alias("_qid"),
-            F.lit(None).cast("string").alias("_cid"),
-            F.col(query_vec).cast("array<double>").alias("_vec"),
-            F.pmod(F.xxhash64(F.col(query_id)), F.lit(QB)).cast("int").alias("_qb"),
-        )
-        # replicate each query block across every corpus block
-        .withColumn("_cb", F.explode(F.sequence(F.lit(0), F.lit(CB - 1))))
+    # vectors unified to double for the matmul. NULL-vector rows are
+    # excluded on BOTH sides: a null corpus vector can never rank (the
+    # broadcast sibling's null cosine sorts last and surfaces only when
+    # a query has fewer than k non-null candidates), and a null query
+    # vector returns no rows — the same contract as radius_search's
+    # null-sim drop
+    both = _block_pair_frame(
+        queries, query_id, {"_vec": F.col(query_vec).cast("array<double>")},
+        corpus, corpus_id, {"_vec": F.col(corpus_vec).cast("array<double>")},
+        query_block_rows, corpus_block_rows, num_query_blocks, num_corpus_blocks,
     )
-    c = (
-        corpus.filter(F.col(corpus_vec).isNotNull())
-        .select(
-            F.lit(None).cast("string").alias("_qid"),
-            F.col(corpus_id).cast("string").alias("_cid"),
-            F.col(corpus_vec).cast("array<double>").alias("_vec"),
-            F.pmod(F.xxhash64(F.col(corpus_id)), F.lit(CB)).cast("int").alias("_cb"),
-        )
-        .withColumn("_qb", F.explode(F.sequence(F.lit(0), F.lit(QB - 1))))
-    )
-    both = q.unionByName(c.select(*q.columns))
-
-    # the LOCAL tie-break must apply the same order the TYPED global
-    # window will ("10" < "9" as strings, but 9 < 10 as the window sees
-    # them — a tied candidate at the local k-boundary would otherwise be
-    # pre-reduced away in favor of one the window discards); see
-    # _cid_sort_kind for the supported-type contract (r8 review)
-    cid_kind = _cid_sort_kind(cid_type, "blocked top-k")
-
-    candidates = (
-        _grouped_pair_topk(both, ["_qb", "_cb"], kk, metric, cid_kind)
-        # back to the caller's id types BEFORE the window: exact type
-        # (and tie-break) parity with the broadcast path
-        .withColumn("_qid", F.col("_qid").cast(qid_type))
-        .withColumn("_cid", F.col("_cid").cast(cid_type))
+    candidates = _typed_ids(
+        _grouped_pair_topk(both, ["_qb", "_cb"], kk, metric, cid_kind),
+        queries, query_id, corpus, corpus_id,
     )
     return (
         candidates.withColumn("rank", F.row_number().over(_rank_window("_qid")))
@@ -822,54 +823,32 @@ def radius_search_blocked(
     num_corpus_blocks: int | None = None,
 ) -> DataFrame:
     """Range search for CORPUS-SIZED query sets — :func:`radius_search`
-    for query batches no broadcast can hold. Same bipartite block-pair
-    machinery as :func:`topk_similarity_join_blocked` (same string id
-    transport, same typed tie-break contract), but the per-pair task
-    emits the radius HITS: with ``limit_per_query`` it pre-reduces each
-    query's hits to the tie-aware local top-limit (so the emit is
-    bounded by limit·nq·CB, not by selectivity) and one global window
-    finalizes; without a limit every hit streams out and no window runs
-    at all — the radius predicate is the reduction, exactly as in the
-    broadcast form. Cosine only, like radius_search."""
-    qid_type = queries.schema[query_id].dataType
-    cid_type = corpus.schema[corpus_id].dataType
-    QB = int(num_query_blocks or max(1, -(-queries.count() // int(query_block_rows))))
-    CB = int(num_corpus_blocks or max(1, -(-corpus.count() // int(corpus_block_rows))))
+    for query batches no broadcast can hold. Same block-pair layout as
+    :func:`topk_similarity_join_blocked` (:func:`_block_pair_frame`,
+    same typed tie-break contract), but the per-pair task emits the
+    radius HITS: with ``limit_per_query`` it pre-reduces each query's
+    hits to the tie-aware local top-limit (so the emit is bounded by
+    limit·nq·CB, not by selectivity) and one global window finalizes;
+    without a limit every hit streams out and no window runs at all —
+    the radius predicate is the reduction, exactly as in the broadcast
+    form. Cosine only, like radius_search."""
     lim = None if limit_per_query is None else int(limit_per_query)
-    rad = float(radius)
-
-    # null-vector rows excluded codegen-side before the shuffle — the
-    # broadcast sibling drops them through its null-sim radius
-    # predicate; here they must never reach the numpy task
-    q = (
-        queries.filter(F.col(query_vec).isNotNull())
-        .select(
-            F.col(query_id).cast("string").alias("_qid"),
-            F.lit(None).cast("string").alias("_cid"),
-            F.col(query_vec).cast("array<double>").alias("_vec"),
-            F.pmod(F.xxhash64(F.col(query_id)), F.lit(QB)).cast("int").alias("_qb"),
-        ).withColumn("_cb", F.explode(F.sequence(F.lit(0), F.lit(CB - 1))))
-    )
-    c = (
-        corpus.filter(F.col(corpus_vec).isNotNull())
-        .select(
-            F.lit(None).cast("string").alias("_qid"),
-            F.col(corpus_id).cast("string").alias("_cid"),
-            F.col(corpus_vec).cast("array<double>").alias("_vec"),
-            F.pmod(F.xxhash64(F.col(corpus_id)), F.lit(CB)).cast("int").alias("_cb"),
-        ).withColumn("_qb", F.explode(F.sequence(F.lit(0), F.lit(QB - 1))))
-    )
-    both = q.unionByName(c.select(*q.columns))
-
     if lim is not None:
-        cid_kind = _cid_sort_kind(cid_type, "blocked radius search with limit")
+        cid_kind = _cid_sort_kind(
+            corpus.schema[corpus_id].dataType, "blocked radius search with limit"
+        )
     else:
         cid_kind = "str"  # no limit ⇒ no ranking ⇒ id order never applies
-
-    hits = (
-        _grouped_pair_hits(both, ["_qb", "_cb"], rad, lim, cid_kind)
-        .withColumn("_qid", F.col("_qid").cast(qid_type))
-        .withColumn("_cid", F.col("_cid").cast(cid_type))
+    # null-vector rows excluded before the shuffle — the broadcast
+    # sibling drops them through its null-sim radius predicate
+    both = _block_pair_frame(
+        queries, query_id, {"_vec": F.col(query_vec).cast("array<double>")},
+        corpus, corpus_id, {"_vec": F.col(corpus_vec).cast("array<double>")},
+        query_block_rows, corpus_block_rows, num_query_blocks, num_corpus_blocks,
+    )
+    hits = _typed_ids(
+        _grouped_pair_hits(both, ["_qb", "_cb"], float(radius), lim, cid_kind),
+        queries, query_id, corpus, corpus_id,
     )
     if lim is None:
         return hits.select(
@@ -1169,6 +1148,26 @@ def cosine_neardup_pairs(
     )
 
 
+def _self_block_pairs(df, id_col, vec_col, num_blocks, target_block_rows):
+    """The self-join block-pair layout of :func:`cosine_neardup_pairs_exact`
+    and ``knn.knn_graph``: (_id long, _vec, _blk, _pi, _pj) — rows hash
+    into B blocks by id and replicate to the B block pairs (_pi ≤ _pj)
+    they take part in, so grouping by (_pi, _pj) scores each of the
+    B(B+1)/2 pairs once. One count aggregate sizes B unless
+    ``num_blocks`` is given."""
+    if num_blocks is None:
+        num_blocks = max(1, -(-df.count() // target_block_rows))
+    B = int(num_blocks)
+    return (
+        df.select(F.col(id_col).cast("long").alias("_id"), F.col(vec_col).alias("_vec"))
+        .withColumn("_blk", F.pmod(F.xxhash64(F.col("_id")), F.lit(B)).cast("int"))
+        .withColumn("_o", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
+        .withColumn("_pi", F.least("_blk", "_o"))
+        .withColumn("_pj", F.greatest("_blk", "_o"))
+        .drop("_o")
+    )
+
+
 def cosine_neardup_pairs_exact(
     df: DataFrame,
     threshold: float,
@@ -1191,28 +1190,13 @@ def cosine_neardup_pairs_exact(
     import numpy as np
     import pandas as pd
 
-    if num_blocks is None:
-        n = df.count()  # O(1) result — an aggregate, not a corpus collect
-        num_blocks = max(1, -(-n // target_block_rows))
-    B = int(num_blocks)
+    exploded = _self_block_pairs(df, id_col, vec_col, num_blocks, target_block_rows)
     thr = float(threshold)
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("_id"), F.col(vec_col).alias("_vec")
-    ).withColumn("_blk", F.pmod(F.xxhash64(F.col("_id")), F.lit(B)).cast("int"))
-    exploded = (
-        src.withColumn("_o", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
-        .withColumn("_pi", F.least("_blk", "_o"))
-        .withColumn("_pj", F.greatest("_blk", "_o"))
-        .drop("_o")
-    )
+    normalize_rows = _exact_scoring_core()[0]
 
     def score_block_pair(key, pdf):
         i, j = key
-        mat = np.array(pdf["_vec"].tolist(), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        mat = mat / norms
+        mat = normalize_rows(np.array(pdf["_vec"].tolist(), dtype=np.float64))
         ids = pdf["_id"].to_numpy(dtype=np.int64)
         blk = pdf["_blk"].to_numpy()
         if i == j:

@@ -276,58 +276,40 @@ class SQCodec:
         """ADC top-k for CORPUS-SIZED query sets — the offline-scoring
         sibling of :meth:`search`, whose expression plan scores through
         a broadcast of the query batch (the right interactive contract,
-        impossible for a 10⁶-query job). Bipartite block-pair form
-        (``similarity.topk_similarity_join_blocked``), with one twist:
-        the union frame transports the 1 B/dim TINYINT codes, not
-        decoded doubles — the ×QB corpus replication that blocked
-        search pays is paid on the compressed representation (8× less
-        shuffle), and each scoring task decodes its code block with the
-        numpy image of ``decode_expr``'s arithmetic (same float64 ops,
-        bit-identical values) before the dot-product matmul. NOTHING
-        query-scale touches the driver.
+        impossible for a 10⁶-query job). Block-pair layout of
+        ``similarity.topk_similarity_join_blocked``
+        (``similarity._block_pair_frame``), with one twist: the union
+        frame transports the 1 B/dim TINYINT codes, not decoded doubles
+        — the ×QB corpus replication that blocked search pays is paid
+        on the compressed representation (8× less shuffle), and each
+        scoring task decodes its code block with the numpy image of
+        ``decode_expr``'s arithmetic (same float64 ops, bit-identical
+        values) before the dot-product matmul. NOTHING query-scale
+        touches the driver.
 
         Output (query_id, vec_id, rank, similarity) and the (score
         desc, id asc) tie-break match :meth:`search`; scores differ
         from the expression path only in summation-order ulps (matmul
         vs sequential fold), like every blocked-vs-expr pair in this
         engine."""
-        from pyspark.sql import Window
-
         from deployment_spark.operators.similarity import (
+            _block_pair_frame,
             _cid_sort_kind,
             _grouped_pair_topk,
+            _rank_window,
+            _typed_ids,
         )
 
-        qid_type = queries.schema[query_id].dataType
-        cid_type = codes_df.schema[id_col].dataType
-        cid_kind = _cid_sort_kind(cid_type, "sq batch search")
-        QB = int(
-            num_query_blocks
-            or max(1, -(-queries.count() // int(query_block_rows)))
-        )
-        CB = int(
-            num_code_blocks
-            or max(1, -(-codes_df.count() // int(code_block_rows)))
-        )
+        cid_kind = _cid_sort_kind(codes_df.schema[id_col].dataType, "sq batch search")
         kk = int(k)
-        # null-vec queries / null-code rows are excluded codegen-side:
-        # they cannot be scored (the interactive path's ADC expression
-        # nulls them out), and here they must never reach the task
-        q = queries.filter(F.col(query_vec).isNotNull()).select(
-            F.col(query_id).cast("string").alias("_qid"),
-            F.lit(None).cast("string").alias("_cid"),
-            F.col(query_vec).cast("array<double>").alias("_vec"),
-            F.lit(None).cast("array<tinyint>").alias("_code"),
-            F.pmod(F.xxhash64(F.col(query_id)), F.lit(QB)).cast("int").alias("_qb"),
-        ).withColumn("_cb", F.explode(F.sequence(F.lit(0), F.lit(CB - 1))))
-        c = codes_df.filter(F.col(codes_col).isNotNull()).select(
-            F.lit(None).cast("string").alias("_qid"),
-            F.col(id_col).cast("string").alias("_cid"),
-            F.lit(None).cast("array<double>").alias("_vec"),
-            F.col(codes_col).alias("_code"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(CB)).cast("int").alias("_cb"),
-        ).withColumn("_qb", F.explode(F.sequence(F.lit(0), F.lit(QB - 1))))
-        both = q.unionByName(c.select(*q.columns))
+        # null-vec queries / null-code rows are excluded before the
+        # shuffle: they cannot be scored (the interactive path's ADC
+        # expression nulls them out)
+        both = _block_pair_frame(
+            queries, query_id, {"_vec": F.col(query_vec).cast("array<double>")},
+            codes_df, id_col, {"_code": F.col(codes_col)},
+            query_block_rows, code_block_rows, num_query_blocks, num_code_blocks,
+        )
         lo, scale = self.lo, self.scale
 
         def decode_codes(cp):
@@ -338,17 +320,15 @@ class SQCodec:
             # float64, elementwise — bit-identical to the Catalyst path
             return lo + (codes + 128.0) * scale
 
-        candidates = (
+        candidates = _typed_ids(
             _grouped_pair_topk(
                 both, ["_qb", "_cb"], kk, "dot", cid_kind,
                 corpus_decode=decode_codes,
-            )
-            .withColumn("_qid", F.col("_qid").cast(qid_type))
-            .withColumn("_cid", F.col("_cid").cast(cid_type))
+            ),
+            queries, query_id, codes_df, id_col,
         )
-        w = Window.partitionBy("_qid").orderBy(F.desc("_sim"), F.asc("_cid"))
         return (
-            candidates.withColumn("rank", F.row_number().over(w))
+            candidates.withColumn("rank", F.row_number().over(_rank_window("_qid")))
             .filter(F.col("rank") <= kk)
             .select(
                 F.col("_qid").alias(query_id),

@@ -7,6 +7,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from deployment_spark.operators.binary import hamming_topk_blocked
+from deployment_spark.operators.pq import PQCodec
 from deployment_spark.operators.similarity import (
     cosine_neardup_pairs,
     radius_search,
@@ -20,6 +22,7 @@ from deployment_spark.operators.similarity import (
     topk_similarity_join_blocked,
     topk_similarity_join_expr,
 )
+from deployment_spark.operators.sq import SQCodec
 
 
 def _blocked_small(corpus, queries, k=5, **kw):
@@ -135,25 +138,6 @@ def test_blocked_tie_break_across_corpus_blocks(spark):
     assert all(abs(r.similarity - 1.0) < 1e-12 for r in got)
 
 
-def test_blocked_preserves_large_int64_ids(spark):
-    """Ids above 2^53 — the reason ids travel the pandas stage as
-    strings: the union frame's nullable id columns become float64 in
-    pandas, which silently corrupts snowflake-scale int64 ids."""
-    base = 1 << 60
-    corpus = spark.createDataFrame(
-        [(base + i, [float(i), 1.0]) for i in range(6)],
-        "vec_id long, embedding array<double>",
-    )
-    queries = spark.createDataFrame(
-        [(base + 100, [5.0, 1.0])], "query_id long, query_vec array<double>"
-    )
-    got = topk_similarity_join_blocked(
-        corpus, queries, k=2, num_corpus_blocks=3
-    ).collect()
-    assert got[0].query_id == base + 100
-    assert sorted(r.vec_id for r in got) == [base + 4, base + 5]
-
-
 def test_blocked_empty_and_kcap(spark, embeddings, queries_df):
     """Typed empty result on an empty query set; k > corpus never
     over-returns (same V7 contract as the broadcast path)."""
@@ -200,17 +184,76 @@ def test_blocked_paths_tolerate_null_vectors(spark):
     assert {(r.query_id, r.vec_id) for r in hits} == {(10, 1), (10, 2)}
 
 
-def test_blocked_rejects_unorderable_id_types(spark):
+def _ones(vec):
+    # one packed word of x ones, x = the vector's first component: the
+    # Hamming distance between two such words is |x_a - x_b|
+    return F.expr(f"array(shiftleft(1L, cast({vec}[0] as int)) - 1)")
+
+
+def _pq_codec():
+    # m=1: the six centroids are the inline corpus vectors themselves
+    return PQCodec(np.array([[[float(i), 1.0] for i in range(6)]]))
+
+
+def _sq_codec():
+    return SQCodec(np.array([0.0, 1.0]), np.array([5.0, 1.0]))
+
+
+# every blocked operator over an inline (vec_id, embedding) corpus and
+# (query_id, query_vec) batch; on the frames below each ranks corpus
+# rows by closeness of the first component to the query's
+BLOCKED_OPS = {
+    "topk_similarity_join_blocked": lambda c, q, k: topk_similarity_join_blocked(
+        c, q, k=k, num_corpus_blocks=3
+    ),
+    "radius_search_blocked": lambda c, q, k: radius_search_blocked(
+        c, q, 0.99, limit_per_query=k, num_corpus_blocks=3
+    ),
+    "hamming_topk_blocked": lambda c, q, k: hamming_topk_blocked(
+        c.select("vec_id", _ones("embedding").alias("bits")),
+        q.select("query_id", _ones("query_vec").alias("query_bits")),
+        k=k, num_corpus_blocks=3,
+    ),
+    "PQCodec.search_batch": lambda c, q, k: _pq_codec().search_batch(
+        _pq_codec().encode(c), q, k=k, num_code_blocks=3
+    ),
+    "SQCodec.search_batch": lambda c, q, k: _sq_codec().search_batch(
+        _sq_codec().encode(c), q, k=k, num_code_blocks=3
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(BLOCKED_OPS))
+def test_blocked_preserves_large_int64_ids(spark, op):
+    """Ids above 2^53 — the reason every blocked operator moves ids
+    through its pandas stage as strings: the union frame's nullable id
+    columns become float64 in pandas, which silently corrupts
+    snowflake-scale int64 ids (base+4 and base+5 would collide)."""
+    base = 1 << 60
+    corpus = spark.createDataFrame(
+        [(base + i, [float(i), 1.0]) for i in range(6)],
+        "vec_id long, embedding array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(base + 100, [5.0, 1.0])], "query_id long, query_vec array<double>"
+    )
+    got = BLOCKED_OPS[op](corpus, queries, 2).collect()
+    assert {r.query_id for r in got} == {base + 100}
+    assert sorted(r.vec_id for r in got) == [base + 4, base + 5]
+
+
+@pytest.mark.parametrize("op", list(BLOCKED_OPS))
+def test_blocked_rejects_unorderable_id_types(spark, op):
     """r8 review: a decimal/timestamp corpus id would silently fall back
     to STRING tie-break order inside the pandas stage while the global
     window orders by the real type — wrong ids at tied k-boundaries.
-    The operator must refuse such types up front instead."""
+    Every blocked operator must refuse such types up front instead."""
     corpus = spark.createDataFrame(
         [(1, [1.0, 0.0])], ["vec_id", "embedding"]
     ).withColumn("vec_id", F.col("vec_id").cast("decimal(10,0)"))
     queries = spark.createDataFrame([(1, [1.0, 0.0])], ["query_id", "query_vec"])
     with pytest.raises(ValueError, match="unsupported corpus id type"):
-        topk_similarity_join_blocked(corpus, queries, k=1)
+        BLOCKED_OPS[op](corpus, queries, 1)
 
 
 def test_radius_blocked_matches_broadcast(embeddings, queries_df):
